@@ -5615,8 +5615,8 @@ def curation_e2e(spark, sf_dir):
     # quality→dedup→decontam subtree re-runs under each (measured
     # 7.0 → 5.5 s warm at sf0.1; at cluster scale this is the
     # re-read-the-corpus-4× tax)
-    from meza_spark.llm.cluster import _stats_barrier
-    clean = _stats_barrier(clean)
+    from meza_spark.util import barrier
+    clean, _ = barrier(clean)
     ratios = dsir.fit_log_ratios(
         None, clean, target_pred=F.col("lang") == "en")
     w = dsir.dsir_weights(clean, ratios)

@@ -18,39 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import barrier
+
 __all__ = ["connected_components", "near_dedup",
            "near_dedup_incremental", "semantic_dedup"]
-
-
-def _stats_barrier(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` and return a frame whose lineage AND size
-    statistics are both reset to reality — the building block every
-    iterative DataFrame loop here needs. The CC loop uses the FUSED
-    form inline (both frames persisted, one materializing count, two
-    cache-read checkpoints — r3); this single-frame helper remains the
-    utility for one-frame loops (e.g. custom iterative callers).
-
-    Why not plain ``localCheckpoint``: its ``LogicalRDD`` keeps the
-    *estimated* statistics of the plan it replaced (``originStats``).
-    Catalyst's default size estimate for a join is the PRODUCT of its
-    children's sizes, so in an iterative loop the per-round estimate
-    compounds multiplicatively: with j self-joins per round the
-    sizeInBytes digit count grows ~(j+1)ˣ per round, and by round ~6
-    the optimizer is multiplying 10⁷-digit BigIntegers — planning time
-    explodes from <1 s to minutes while the DATA is unchanged
-    (observed: 1 s → 5.8 s → 109 s rounds on a 5 k-vertex graph).
-
-    The barrier: persist → count (stats become the measured cache
-    size) → localCheckpoint (lineage truncates; originStats now carry
-    the small, real number) → unpersist (the checkpoint blocks are
-    independent of the cache). One extra cheap job per round buys
-    constant-time planning for any number of rounds.
-    """
-    df = df.persist()
-    df.count()
-    out = df.localCheckpoint()
-    df.unpersist()
-    return out
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -80,13 +51,12 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     SHRINKING quotient edge set, not the full O(E) edge list — after
     the first round near-clique duplicate clusters have collapsed to
     single nodes and later rounds touch a tiny fraction of E. Shuffles
-    carry ids only (16 B/row). Each round is cut with a FUSED stats
-    barrier (persist both new frames → ONE materializing count on the
-    edges, which fills the labels cache too → two cache-read
-    localCheckpoints) so lineage and Catalyst's size estimates reset
-    to measured reality at one count job per round (see
-    ``_stats_barrier`` for the BigInteger planning blowup this
-    prevents).
+    carry ids only (16 B/row). Each round is cut with ONE stats
+    barrier over both new frames (a single materializing count on the
+    edges fills the labels cache too) so lineage and Catalyst's size
+    estimates reset to measured reality at one count job per round
+    (see :func:`meza_spark.util.barrier` for the BigInteger planning
+    blowup this prevents).
     """
     # symmetrize with ONE scan of the (possibly expensive) pair
     # subtree: explode each pair into both directions — a union of the
@@ -114,22 +84,11 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     ce = (edges.join(lmap("s"), on="s").join(lmap("d"), on="d")
           .select(F.col("_ns").alias("s"), F.col("_nd").alias("d"))
           .where(F.col("s") != F.col("d")).distinct())
-    def _barrier_count(df):
-        """_stats_barrier variant returning (frame, row count): the
-        materializing count doubles as the loop's emptiness check —
-        no separate head() job per round."""
-        df = df.persist()
-        cnt = df.count()
-        out = df.localCheckpoint()
-        df.unpersist()
-        return out, cnt
-
-    # First quotient barrier, deferred (optimization r9 third pass):
-    # persist + count decides WHICH path runs; the fast path consumes
-    # ``ce`` exactly once (the toPandas below), so its lineage cut
-    # would be a pure waste — only the distributed loop, which
-    # re-references ``ce`` every round, pays the localCheckpoint job.
-    ce = ce.persist()
+    # First quotient: one lazy lineage cut, materialized by the count
+    # that decides WHICH path runs. The fast path reads the cut once
+    # (the toPandas below); the distributed loop re-references it
+    # every round without recomputing the init hop.
+    ce = ce.localCheckpoint(eager=False)
     n_ce = ce.count()
 
     # Small-quotient fast path: after the init hop, duplicate clusters
@@ -156,8 +115,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                 parent[x], x = r, parent[x]
             return r
 
-        pdf = ce.toPandas()  # one Arrow job (cache read); ids only
-        ce.unpersist()
+        pdf = ce.toPandas()  # one Arrow job (checkpoint read); ids only
         for a_, b_ in zip(pdf["s"].to_numpy().tolist(),
                           pdf["d"].to_numpy().tolist()):
             ra, rb = _find(a_), _find(b_)
@@ -180,45 +138,28 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         # edges): the init labels are already the fixpoint — if any
         # vertex had label(label(v)) < label(v), the edge between them
         # would be a cross-label quotient edge (r2 verdict #5
-        # early-exit, hoisted above the loop's lineage cut).
-        ce.unpersist()
+        # early-exit).
         return labels.select(*out_cols)
-    # Distributed loop: NOW cut the first quotient's lineage (the loop
-    # re-references ``ce`` every round; cache-read checkpoint, cheap).
-    ce2 = ce.localCheckpoint(eager=False)
-    ce.unpersist()
-    ce = ce2
-    # Fused per-round barrier (r2 verdict #5: "one count job per
-    # round, not two"): persist BOTH new frames, run ONE materializing
-    # count (ce depends on the new labels, so counting ce fills both
-    # caches and CacheManager records measured stats for each), then
-    # cut lineage with two cache-read localCheckpoints (cheap jobs —
-    # no recompute) and drop the caches. Previously each round paid
-    # two full materializing counts (labels + edges barriers).
+    # One count job per round, not two (r2 verdict #5): ce depends on
+    # the new labels, so ``barrier(ce, labels)`` fills both caches —
+    # and records measured stats for each — with a single count.
     for _ in range(max_iter):
         if n_ce == 0:  # quotient has no edges → fully merged
             break
         # 1) min neighbor label per label-node on the quotient graph
         m = ce.groupBy("s").agg(F.min("d").alias("nl"))
         # 2) vertex labels re-point: label := min(label, m[label])
-        new_labels = (labels.join(m.select(F.col("s").alias("label"), "nl"),
-                                  on="label", how="left")
-                      .select("v", F.least(
-                          "label", F.coalesce("nl", "label")).alias("label"))
-                      .persist())
-        labels = new_labels
+        labels = (labels.join(m.select(F.col("s").alias("label"), "nl"),
+                              on="label", how="left")
+                  .select("v", F.least(
+                      "label", F.coalesce("nl", "label")).alias("label")))
         # 3) contract: re-label both endpoints through the updated
         # vertex map (label-nodes are vertices, so the map covers
         # them), drop the now-internal edges, dedupe
-        new_ce = (ce.join(lmap("s"), on="s").join(lmap("d"), on="d")
-                  .select(F.col("_ns").alias("s"), F.col("_nd").alias("d"))
-                  .where(F.col("s") != F.col("d")).distinct()
-                  .persist())
-        n_ce = new_ce.count()  # the round's ONE materializing job
-        labels = new_labels.localCheckpoint()
-        ce = new_ce.localCheckpoint()
-        new_labels.unpersist()
-        new_ce.unpersist()
+        ce = (ce.join(lmap("s"), on="s").join(lmap("d"), on="d")
+              .select(F.col("_ns").alias("s"), F.col("_nd").alias("d"))
+              .where(F.col("s") != F.col("d")).distinct())
+        ce, labels, n_ce = barrier(ce, labels)
     # resolution: contraction leaves a union-find FOREST — a vertex may
     # point at a label-node that itself merged later. Chase
     # label(v) ← label(label(v)) to the fixpoint; fixpoints are exactly
@@ -235,10 +176,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                           F.col("label").alias("_lx")),
             labels["label"] == F.col("_x"), "left")
             .select("v", F.coalesce("_lx", "label").alias("label")))
-        chased = chased.persist()
-        cur = _sum(chased)
-        labels = chased.localCheckpoint()
-        chased.unpersist()
+        labels, cur = barrier(chased, probe=_sum)
         if cur == prev:
             break
         prev = cur

@@ -459,13 +459,13 @@ def ngram_jaccard(df_a: DataFrame, df_b: DataFrame | None = None,
     a = _ngram_side(df_a, text_col, id_col, "id_a", n, join_on)
     # The self-join deliberately stays LAZY even though the rename
     # projection defeats ReuseExchange and the shingle subtree
-    # executes under both legs: measured at sf0.1, a _stats_barrier
-    # on the shingled side is net SLOWER (1.4→1.7 s warm — the
-    # materialization job costs more than the saved re-shingle), and
-    # at cluster scale checkpointing the full shingle table to local
-    # disk trades two parallel codegen scans for a giant write. A
-    # caller looping over the pairs (near_dedup_incremental) should
-    # persist its own side instead — which it does.
+    # executes under both legs: measured at sf0.1, a stats barrier
+    # (util.barrier) on the shingled side is net SLOWER (1.4→1.7 s
+    # warm — the materialization job costs more than the saved
+    # re-shingle), and at cluster scale checkpointing the full shingle
+    # table to local disk trades two parallel codegen scans for a
+    # giant write. A caller that reuses a side
+    # (near_dedup_incremental) cuts its lineage itself instead.
     b = a if self_join else _ngram_side(df_b, text_col, id_col, "id_b",
                                         n, join_on)
     return _ngram_pairs(a, b, self_join=self_join,

@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..process import _global_index
+from ..util import range_offsets
 from .text import tokens
 
 __all__ = ["hash_sample", "stratified_hash_sample",
@@ -206,31 +208,14 @@ def global_shuffle(df: DataFrame, key_col: str, seed: int = 0,
 
     Scale shape: one range-partitioned distributed sort on a 32-char
     key (Spark samples boundaries, shuffles once, sorts partitions
-    locally). The emitted 0-based ``out`` rank is a two-pass
-    per-partition offset computation — count per partition, driver
-    cumsum, local row_number — NO single-reducer window.
+    locally). The emitted 0-based ``out`` rank is the global row index
+    from two-pass partition offsets — count per partition, driver
+    cumsum, within-partition record number — NO window at all.
     """
     cols = df.columns
     h = F.md5(F.concat(F.col(key_col).cast("string"), F.lit(f"#{seed}")))
-    tagged = (df.withColumn("_hk", h)
-              .repartitionByRange(F.col("_hk"))
-              .sortWithinPartitions("_hk")
-              .withColumn("_pid", F.spark_partition_id())).persist()
-    counts = {r["_pid"]: r["c"] for r in
-              tagged.groupBy("_pid").agg(F.count("*").alias("c"))
-              .collect()}
-    offsets, acc = [], 0
-    for p in sorted(counts):
-        offsets.append((p, acc))
-        acc += counts[p]
-    if not offsets:
-        return df.withColumn(out, F.lit(0).cast("bigint"))
-    off = df.sparkSession.createDataFrame(offsets, "_pid int, _off long")
-    local = F.row_number().over(
-        Window.partitionBy("_pid").orderBy("_hk")) - 1
-    return (tagged.join(F.broadcast(off), on="_pid")
-            .withColumn(out, (F.col("_off") + local).cast("bigint"))
-            .select(*cols, out))
+    tagged, _ = _global_index(df.withColumn("_hk", h), "_hk")
+    return tagged.select(*cols, F.col("_gidx").alias(out))
 
 
 def pack_shards(df: DataFrame, weight_col: str, budget: int,
@@ -249,28 +234,13 @@ def pack_shards(df: DataFrame, weight_col: str, budget: int,
     the physical partition id, so no reducer sees more than one
     partition's rows.
     """
-    keys = [order_by] if isinstance(order_by, str) else list(order_by)
     cols = df.columns
-    tagged = (df.repartitionByRange(*[F.col(k) for k in keys])
-              .sortWithinPartitions(*keys)
-              .withColumn("_pid", F.spark_partition_id())).persist()
-    psums = {r["_pid"]: r["s"] for r in
-             tagged.groupBy("_pid")
-             .agg(F.sum(weight_col).alias("s")).collect()}
-    if not psums:
-        return df.withColumn(out, F.lit(0).cast("bigint"))
-    offsets, acc = [], 0
-    for p in sorted(psums):
-        offsets.append((p, acc))
-        acc += psums[p] or 0
-    off = df.sparkSession.createDataFrame(offsets, "_pid int, _off long")
-    w = (Window.partitionBy("_pid").orderBy(*keys)
+    tagged, _ = range_offsets(df, order_by, weight_col)
+    w = (Window.partitionBy("_pid").orderBy("_idx")
          .rowsBetween(Window.unboundedPreceding, -1))
     local_ex = F.coalesce(F.sum(weight_col).over(w), F.lit(0))
     shard = F.floor((F.col("_off") + local_ex) / budget).cast("bigint")
-    return (tagged.join(F.broadcast(off), on="_pid")
-            .withColumn(out, shard)
-            .select(*cols, out))
+    return tagged.withColumn(out, shard).select(*cols, out)
 
 
 def pack_sequences(df: DataFrame, text_col: str = "text",
@@ -299,24 +269,11 @@ def pack_sequences(df: DataFrame, text_col: str = "text",
             .withColumn("_n", F.size("_t").cast("long"))
             .withColumn("_ok", F.md5(F.concat(
                 F.col("_id").cast("string"), F.lit(f"#{seed}")))))
-    tagged = (base.repartitionByRange("_ok", "_id")
-              .sortWithinPartitions("_ok", "_id")
-              .withColumn("_pid", F.spark_partition_id())).persist()
-    psums = {r["_pid"]: r["s"] for r in
-             tagged.groupBy("_pid").agg(F.sum("_n").alias("s")).collect()}
-    if not psums:
-        return df.sparkSession.createDataFrame(
-            [], "seq_id long, n_tokens int, n_docs long, text string")
-    offsets, acc = [], 0
-    for p in sorted(psums):
-        offsets.append((p, acc))
-        acc += psums[p] or 0
-    off = df.sparkSession.createDataFrame(offsets, "_pid int, _off long")
-    w = (Window.partitionBy("_pid").orderBy("_ok", "_id")
+    tagged, _ = range_offsets(base, ["_ok", "_id"], "_n")
+    w = (Window.partitionBy("_pid").orderBy("_idx")
          .rowsBetween(Window.unboundedPreceding, -1))
     local_ex = F.coalesce(F.sum("_n").over(w), F.lit(0).cast("long"))
-    placed = (tagged.join(F.broadcast(off), on="_pid")
-              .withColumn("_g", F.col("_off") + local_ex))  # global start
+    placed = tagged.withColumn("_g", F.col("_off") + local_ex)  # global start
     # the sequences this doc touches: floor(g/size) .. floor((g+n-1)/size)
     seqs = F.sequence(F.floor(F.col("_g") / size),
                       F.floor((F.col("_g") + F.col("_n") - 1) / size))

@@ -25,6 +25,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import range_offsets
+
 __all__ = [
     "cut", "tfilter", "grep", "unique", "hash_", "sort", "peek",
     "fillempty", "aggregate", "merge", "group", "pivot", "normalize",
@@ -194,8 +196,6 @@ def unique(df: DataFrame, fields: Sequence[str] | None = None,
             F.struct(*[F.col(f) for f in (fields or df.columns)])
         cols = df.columns
         tagged, _ = _global_index(df, order_by)
-        if tagged is None:
-            return df
         tagged = tagged.withColumn("_key", key)
         w = Window.partitionBy("_key").orderBy("_gidx")
         dist = F.col("_gidx") - F.lag("_gidx").over(w)
@@ -837,8 +837,8 @@ def slice_rows(df: DataFrame, order_by: str | Sequence[str],
 
     Scale-safe two-pass global numbering — NO single-partition window:
       1. range-repartition + sortWithinPartitions on the keys (the
-         distributed half of a global sort) and persist, so both
-         passes see identical partition contents;
+         distributed half of a global sort) behind a lazy lineage cut,
+         so both passes see identical partition contents;
       2. pass 1: count rows per partition — a partitions-sized agg;
       3. cumulative offsets on the driver (O(partitions) integers);
       4. pass 2: keep rows where ``offset[pid] + local_index`` falls
@@ -853,8 +853,6 @@ def slice_rows(df: DataFrame, order_by: str | Sequence[str],
     """
     cols = df.columns
     tagged, total = _global_index(df, order_by)
-    if tagged is None:
-        return df
     if last is not None and last < 0:
         last = total + last
     rn = F.col("_gidx") + 1  # 1-based global row number
@@ -865,38 +863,13 @@ def slice_rows(df: DataFrame, order_by: str | Sequence[str],
 
 
 def _global_index(df: DataFrame, order_by: str | Sequence[str]):
-    """Distributed 0-based global row index ``_gidx`` in key order, by
-    two-pass partition offsets (no single-partition window). Returns
-    ``(tagged_df, total_rows)``; ``(None, 0)`` for an empty frame.
-
-    Pass 1 counts rows per range-partition (a partitions-sized agg);
-    the driver folds counts into cumulative offsets; pass 2 adds
-    ``offset[pid] + local_index`` via a broadcast join, where the
-    local index is ``monotonically_increasing_id``'s documented low 33
-    bits (the within-partition record number). The sorted frame is
-    persisted so both passes see identical partition contents.
+    """Distributed 0-based global row index ``_gidx`` in key order:
+    ``offset[pid] + local_index`` from :func:`~meza_spark.util.range_offsets`
+    (no single-partition window). Returns ``(tagged_df, total_rows)``.
     """
-    keys = [order_by] if isinstance(order_by, str) else list(order_by)
-    tagged = (df.repartitionByRange(*[F.col(k) for k in keys])
-              .sortWithinPartitions(*keys)
-              .withColumn("_pid", F.spark_partition_id())
-              .withColumn("_idx", F.monotonically_increasing_id()
-                          .bitwiseAND(F.lit((1 << 33) - 1))))
-    tagged = tagged.persist()
-    counts = {r["_pid"]: r["n"] for r in
-              tagged.groupBy("_pid").agg(F.count("*").alias("n"))
-              .collect()}
-    if not counts:
-        return None, 0
-    offsets, acc = [], 0
-    for p in sorted(counts):
-        offsets.append((p, acc))
-        acc += counts[p]
-    off_df = df.sparkSession.createDataFrame(offsets, "_pid int, _off long")
-    tagged = (tagged.join(F.broadcast(off_df), on="_pid")
-              .withColumn("_gidx", F.col("_off") + F.col("_idx"))
-              .drop("_pid", "_idx", "_off"))
-    return tagged, acc
+    tagged, total = range_offsets(df, order_by)
+    return (tagged.withColumn("_gidx", F.col("_off") + F.col("_idx"))
+            .drop("_pid", "_idx", "_off"), total)
 
 
 def salted_join(left: DataFrame, right: DataFrame, on: str | Sequence[str],

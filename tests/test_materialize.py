@@ -1,0 +1,82 @@
+"""Materialization: no operator leaves a Dataset cache behind.
+
+Operators are records in, records out; the only Dataset cache the
+engine takes is the stats barrier in ``meza_spark.util.barrier``, which
+drops it before returning. A cache that outlived its operator would
+serve stale rows to a later call over a rewritten input.
+"""
+
+import ast
+import glob
+import os
+
+import pandas as pd
+from pyspark.sql import functions as F
+
+from meza_spark.llm.cluster import connected_components
+from meza_spark.llm.sampling import global_shuffle, pack_sequences, \
+    pack_shards
+from meza_spark.process import slice_rows, unique
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_offset_scans_see_rewritten_input(spark, tmp_path):
+    path = str(tmp_path / "rows.parquet")
+
+    def run(n):
+        # rewritten outside Spark: same path, different row count
+        pd.DataFrame({"k": range(n), "w": [1] * n}).to_parquet(path)
+        df = spark.read.parquet(path)
+        packed = pack_shards(df, "w", budget=10, order_by="k")
+        return (packed.count(),
+                packed.agg(F.max("shard_id")).first()[0],
+                slice_rows(df, "k", first=1).count())
+
+    assert run(100) == (100, 9, 100)
+    assert run(300) == (300, 29, 300)
+
+
+def test_no_cache_outlives_its_operator(spark):
+    spark.catalog.clearCache()
+    df = spark.range(200).select(
+        F.col("id").alias("doc_id"), F.lit(3).alias("w"),
+        (F.col("id") % 7).alias("g"),
+        F.concat(F.lit("a b c "), F.col("id").cast("string"))
+        .alias("text"))
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long")
+    pack_shards(df, "w", budget=50, order_by="doc_id").collect()
+    global_shuffle(df, "doc_id").collect()
+    pack_sequences(df, size=8).collect()
+    slice_rows(df, "doc_id", first=3, last=9).collect()
+    unique(df, ["g"], bufsize=5, order_by="doc_id").collect()
+    connected_components(pairs, small_quotient_threshold=0).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _cache_calls(path):
+    """Line numbers of every ``.persist(...)`` / ``.cache(...)`` call."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    return [node.lineno for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("persist", "cache")]
+
+
+def test_dataset_cache_only_in_barrier():
+    util = os.path.join(ROOT, "meza_spark", "util.py")
+    with open(util, encoding="utf-8") as fh:
+        fn = next((n for n in ast.parse(fh.read()).body
+                   if isinstance(n, ast.FunctionDef)
+                   and n.name == "barrier"), None)
+    inside = range(fn.lineno, fn.end_lineno + 1) if fn else range(0)
+    paths = glob.glob(os.path.join(ROOT, "meza_spark", "**", "*.py"),
+                      recursive=True)
+    paths.append(os.path.join(ROOT, "__spark_entry__.py"))
+    stray = [f"{os.path.relpath(p, ROOT)}:{line}" for p in sorted(paths)
+             for line in _cache_calls(p)
+             if not (p == util and line in inside)]
+    assert not stray, stray
+    assert any(line in inside for line in _cache_calls(util))

@@ -5,6 +5,8 @@ operator change stops a filter from reaching the parquet scan, widens a
 pruned ReadSchema, or degrades a broadcast join to shuffle, these fail.
 """
 
+import pytest
+
 import __spark_entry__ as entry
 
 from meza_spark.util import explain_str
@@ -65,10 +67,12 @@ def test_exact_dedup_shuffles_digest_not_text(spark):
     assert exch and "_k" in exch[0], plan
 
 
-def test_slice_rows_has_no_global_window(spark):
-    # the two-pass offset slice must not plan a WindowExec (the old
-    # row_number() OVER (ORDER BY ...) was a single-reducer sort)
-    plan = _plan(entry.slice_orders(spark, SF), "simple")
+@pytest.mark.parametrize("query", ["slice_orders", "shuffle_rank"])
+def test_slice_rows_has_no_global_window(spark, query):
+    # the two-pass offset scans must not plan a WindowExec: a global
+    # row_number() OVER (ORDER BY ...) is a single-reducer sort, and
+    # the within-partition record number already is the local index
+    plan = _plan(getattr(entry, query)(spark, SF), "simple")
     assert "Window" not in plan, plan
 
 
