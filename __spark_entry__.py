@@ -6153,11 +6153,14 @@ GROUP BY d.doc_id
 # The sniff-replay WHEN chain shared by the multimodal_meta and
 # media_dir_roundtrip twins (review find, r8: the precedence used to
 # live in two copy-pasted SQL blocks — any new container had to be
-# edited twice or the oracles diverged). Text-expressible prefixes of
-# attach_media_meta's CASE, same precedence; substr/LIKE here are
-# CHARACTER-indexed vs the byte-indexed Spark sniff — equivalent only
-# on the ASCII corpus (multibyte-safe magics like PNG/JPEG/EBML/bare
-# MPEG sync need no branch: their lead bytes can't open ASCII text).
+# edited twice or the oracles diverged). It replays the text-expressible
+# rows of multimodal._MAGICS, same precedence, written out by hand on
+# purpose: it is the independent reference the oracle compares
+# attach_media_meta against. substr/LIKE here are CHARACTER-indexed vs
+# the byte-indexed Spark sniff — equivalent only on the ASCII corpus
+# (rows whose signature holds a byte the ASCII corpus never contains
+# — png, jpeg, zip, gzip, ebml and the bare-MPEG-sync predicate —
+# need no branch).
 _SNIFF_WHENS = """
                      WHEN text LIKE 'GIF87a%' OR text LIKE 'GIF89a%'
                        THEN 'gif'

@@ -224,6 +224,14 @@ def test_parse_headers_pure():
     assert wv["format"] == "wav" and wv["sample_rate"] == 8000
     assert wv["channels"] == 1 and wv["duration_ms"] == 2000
     assert _parse_headers(b"garbage bytes here")["format"] == "unknown"
+    # dispatch by the shared sniff: netpbm decodes; a PNG too short for
+    # IHDR and an ICO (not header-parsed) stay 'unknown'
+    from meza_spark.llm.multimodal import decode_pixels
+    assert decode_pixels(b"P5 3 1 255 " + bytes([10, 20, 30])).shape \
+        == (1, 3, 1)
+    assert _parse_headers(_mini_png(640, 480)[:20])["format"] == "unknown"
+    ico = b"\x00\x00\x01\x00\x01\x00" + b"\x00" * 16
+    assert _parse_headers(ico)["format"] == "unknown"
 
 
 def test_parse_media_headers_df(spark):
@@ -2308,67 +2316,6 @@ def test_decode_video_df(spark):
         decode_video(df).collect()          # default errors on the BMP
 
 
-def test_pillow_parity_lossless_codecs(monkeypatch):
-    """With MEZA_SPARK_PILLOW=1 on a Pillow host, decode_pixels
-    prefers Pillow for PNG/TIFF/BMP; this pins bit-equality between
-    the Pillow branch and the authoritative stdlib decoders across
-    the gate corpus (PNG filters/interlace/16-bit, the TIFF
-    compression x predictor x endian x planar matrix, BMP). GIF is
-    intentionally NOT routed through Pillow (background-fill
-    divergence). Skipped where Pillow is absent — the stdlib path is
-    then the only path and is gated elsewhere."""
-    import itertools
-
-    import numpy as np
-    import pytest as _pytest
-
-    from meza_spark.llm import multimodal as mm
-
-    monkeypatch.setenv("MEZA_SPARK_PILLOW", "1")
-    monkeypatch.setattr(mm, "_PILLOW", None)   # re-evaluate opt-in
-    if not mm._pillow():
-        # r8 re-check (r7 verdict #8): no Pillow anywhere on disk and
-        # pip has no network route on this image — the skip stands
-        # until a future image ships a wheel
-        _pytest.skip("Pillow not installed in this environment")
-    rng = np.random.default_rng(5)
-    px = rng.integers(0, 256, (9, 7, 3), dtype=np.uint8)
-    gray = px[:, :, :1]
-    payloads = [mm._encode_bmp(px)]
-    for interlace in (False, True):
-        payloads.append(mm._encode_png(px, interlace=interlace))
-        payloads.append(mm._encode_png(gray[:, :, 0],
-                                       interlace=interlace))
-    for comp, pred, be, planar in itertools.product(
-            (1, 5, 32773), (1, 2), (False, True), (1, 2)):
-        payloads.append(mm._encode_tiff(px, compression=comp,
-                                        predictor=pred, big_endian=be,
-                                        planar=planar))
-    for b in payloads:
-        if b[:2] == b"BM":
-            ref = mm._decode_bmp(b)
-        elif b[:8] == mm._PNG_SIG:
-            ref = mm._decode_png(b)
-        else:
-            ref = mm._decode_tiff(b)
-        got = mm._pillow_decode(b)
-        assert np.array_equal(got, ref), b[:8]
-    # GIF must NOT route through Pillow even when opted in
-    pal = rng.integers(0, 256, (8, 3), dtype=np.uint8)
-    gif = mm._encode_gif(pal[rng.integers(0, 8, (6, 5))])
-    assert np.array_equal(mm.decode_pixels(gif), mm._decode_gif(gif))
-
-
-def test_pillow_default_off(monkeypatch):
-    """Without the explicit opt-in, decode_pixels never consults
-    Pillow — results are host-independent by default."""
-    from meza_spark.llm import multimodal as mm
-
-    monkeypatch.delenv("MEZA_SPARK_PILLOW", raising=False)
-    monkeypatch.setattr(mm, "_PILLOW", None)
-    assert mm._pillow() is False
-
-
 def _f80(x):
     """Encode a positive integer as an 80-bit IEEE extended float."""
     import math
@@ -2921,128 +2868,53 @@ def test_decode_video_external_decoder_hook(spark):
     assert [r["frame_idx"] for r in fs] == [0, 1]
 
 
-def test_pillow_dispatch_and_fallback_without_pillow(monkeypatch):
-    """Verdict r6 #3 fallback option: Pillow isn't installable in this
-    environment, so exercise the dispatch-and-fallback logic with a
-    fake PIL vendored into sys.modules — (a) the opt-in routes
-    lossless payloads through the Pillow branch, (b) the pixel budget
-    is checked BEFORE the pixel load, (c) any Pillow error falls back
-    to the authoritative stdlib path, (d) lossy payloads (JPEG) never
-    touch Pillow. The bit-parity pin on a real Pillow host remains
-    test_pillow_parity_lossless_codecs."""
-    import sys
-    import types
-
-    import numpy as np
-
-    from meza_spark.llm import multimodal as mm
-
-    px = np.arange(27, dtype=np.uint8).reshape(3, 3, 3)
-    png = mm._encode_png(px)
-    jpg = mm._encode_jpeg(px)
-    calls = {"open": 0, "load": 0}
-
-    class FakeIm:
-        format = "PNG"
-        mode = "RGB"
-
-        def __init__(self, huge):
-            self.size = (100_000, 100_000) if huge else (3, 3)
-            self._huge = huge
-
-        def load(self):
-            calls["load"] += 1
-
-        def __array__(self, dtype=None, copy=None):
-            return px.copy()
-
-    fake_image = types.SimpleNamespace()
-    state = {"huge": False, "boom": False}
-
-    def fake_open(buf):
-        calls["open"] += 1
-        if state["boom"]:
-            raise OSError("fake pillow failure")
-        return FakeIm(state["huge"])
-
-    fake_image.open = fake_open
-    pil = types.ModuleType("PIL")
-    pil.Image = fake_image
-    monkeypatch.setitem(sys.modules, "PIL", pil)
-    monkeypatch.setitem(sys.modules, "PIL.Image", fake_image)
-    monkeypatch.setenv("MEZA_SPARK_PILLOW", "1")
-    monkeypatch.setattr(mm, "_PILLOW", None)   # re-evaluate opt-in
-
-    # (a) dispatch: PNG goes through the fake and returns its pixels
-    out = mm.decode_pixels(png)
-    assert calls["open"] == 1 and calls["load"] == 1
-    assert np.array_equal(out, px)
-
-    # (b) budget precedes load: huge declared size → ValueError inside
-    # the Pillow branch BEFORE .load(); decode_pixels then falls back
-    # to the stdlib decode of the real (tiny) payload
-    state["huge"] = True
-    out2 = mm.decode_pixels(png)
-    assert calls["load"] == 1           # load never ran for the bomb
-    assert np.array_equal(out2, mm._decode_png(png))
-    state["huge"] = False
-
-    # (c) Pillow blows up → stdlib fallback, bit-identical result
-    state["boom"] = True
-    out3 = mm.decode_pixels(png)
-    assert np.array_equal(out3, mm._decode_png(png))
-    state["boom"] = False
-
-    # (d) JPEG is never routed through Pillow
-    before = calls["open"]
-    mm.decode_pixels(jpg)
-    assert calls["open"] == before
-
-    # leave the module flag reset for other tests
-    monkeypatch.setattr(mm, "_PILLOW", None)
-
-
 def test_sniffer_lockstep_over_every_container(spark):
-    """The LOCKSTEP invariant _sniff_format's docstring promises,
-    enforced over REAL payloads of every container the fuzz corpus
-    builds (r8): the Python sniff and the JVM codegen CASE must
-    agree byte-for-byte on format — including the honest 'unknown's
-    (wbmp) and the family-level 'ebml'."""
-    from meza_spark.llm.multimodal import _sniff_format, attach_media_meta
+    """Both sniffers read _MAGICS; this pins that they agree, and that
+    no row shadows another: one payload per alternative of every
+    table row (each sniffs to its own row's format), plus the real
+    fuzz-corpus containers and the hand-written edge cases of the two
+    predicate rows — including the honest 'unknown's (wbmp, near-miss
+    magics, sub-3-byte MPEG sync)."""
+    from meza_spark.llm.multimodal import (
+        _MAGICS, _sniff_format, attach_media_meta,
+    )
     from tests.test_properties import _media_fixtures
 
-    payloads = {name: payload
-                for name, (payload, _) in _media_fixtures().items()}
-    payloads["ogg"] = b"OggS" + b"\x00" * 30
-    payloads["ebml"] = b"\x1aE\xdf\xa3" + b"\x00" * 12
-    payloads["mp3_id3"] = b"ID3\x04\x00\x00\x00\x00\x00\x00" + b"\x00" * 8
+    payloads, want = {}, {}
+    for fmt, clauses in _MAGICS:
+        if clauses is None:
+            continue
+        for k in range(max(len(alts) for _, alts in clauses)):
+            p = bytearray(24)
+            for off, alts in clauses:
+                a = alts[k % len(alts)]
+                p[off:off + len(a)] = a
+            payloads[f"{fmt}_{k}"] = bytes(p)
+            want[f"{fmt}_{k}"] = fmt
+    for name, (payload, _) in _media_fixtures().items():
+        payloads[name] = payload
     payloads["mp3_sync"] = b"\xff\xfb\x90\x00" + b"\x00" * 16
-    payloads["flac"] = b"fLaC" + b"\x00" * 20
-    payloads["pdf"] = b"%PDF-1.4\n1 0 obj\n<< >>\nendobj\n"
-    payloads["svg_bare"] = b"<svg width=\"3\" height=\"4\"></svg>"
     payloads["svg_xml"] = b"<?xml version=\"1.0\"?>\n<svg/>" + b" " * 8
     payloads["svg_comment"] = b"<!--\n * license\n-->\n<svg  />" + b" " * 4
     payloads["svg_doctype"] = b"<!DOCTYPE svg PUBLIC x>\n<svg/>  "
     payloads["comment_not_svg"] = b"<!-- a plain xml comment -->    "
     payloads["xml_not_svg"] = b"<?xml version=\"1.0\"?><note/>    "
-    payloads["avif"] = b"\x00\x00\x00\x18ftypavif\x00\x00\x00\x00avif"
-    payloads["heic"] = b"\x00\x00\x00\x18ftypheic\x00\x00\x00\x00heic"
-    payloads["heif"] = b"\x00\x00\x00\x18ftypmif1\x00\x00\x00\x00mif1"
-    from meza_spark.llm.office import encode_docx
-    payloads["zip"] = encode_docx(["lockstep"])       # real PK\x03\x04
     payloads["pk_text"] = b"PK archive (not zip magic)"
-    from meza_spark.llm.rtf import encode_rtf
-    payloads["rtf"] = encode_rtf(["lockstep rtf"])
     payloads["rtf_text"] = b"{ \\rtf needs no space }"
-    import gzip as _gz
-    payloads["gzip"] = _gz.compress(b"gzipped text", mtime=0)
     payloads["short"] = b"\xff\xfb"        # sub-3-byte: both unknown
+    want.update(mp3_sync="mp3", svg_xml="svg", svg_comment="svg",
+                svg_doctype="svg", comment_not_svg="unknown",
+                xml_not_svg="unknown", pk_text="unknown",
+                rtf_text="unknown", short="unknown", wbmp="unknown")
     rows = [(i, bytearray(p))
             for i, p in enumerate(payloads.values())]
     df = spark.createDataFrame(rows, "id long, payload binary")
     jvm = {r["id"]: r["format"] for r in attach_media_meta(df).collect()}
     for i, (name, p) in enumerate(payloads.items()):
-        assert _sniff_format(bytes(p)) == jvm[i], name
+        assert _sniff_format(p) == jvm[i], name
+        assert want.get(name, jvm[i]) == jvm[i], name
+    # every container the table names is reachable from some payload
+    assert {f for f, _ in _MAGICS} <= set(jvm.values())
 
 
 def test_media_sniff_twin_parity_on_adversarial_prefixes(spark, tmp_path):
