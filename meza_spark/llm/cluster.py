@@ -9,12 +9,13 @@ the operator a training-data pipeline actually calls.
 
 Scale design: edges carry ids only (16 B/row through every shuffle);
 each round is one join + one aggregation; lineage is truncated per
-round (iterative DataFrame plans otherwise grow without bound); no
-driver materialization beyond a one-row convergence aggregate.
+round (iterative DataFrame plans otherwise grow without bound); the
+driver collects at most ``small_quotient_threshold + 1`` id pairs.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -32,8 +33,16 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     """Label each vertex of the pair graph with the min vertex id of
     its connected component. Returns ``(id, component)``.
 
-    Algorithm: min-label propagation with EDGE CONTRACTION over the
-    quotient graph (the MapReduce-CC family of Kiveris et al.,
+    ``small_quotient_threshold`` (``t``) bounds the edges the driver
+    collects: each path choice reads the length of one
+    ``limit(t + 1).toPandas()``, whose rows feed the union-find. At
+    most ``t`` pairs: union-find on the driver, no distributed hop.
+    Else a first quotient (after the init hop) of at most ``t``
+    directed edges: union-find plus one broadcast-join re-point. Else,
+    and for any graph when ``t = 0``: the distributed loop.
+
+    Distributed algorithm: min-label propagation with EDGE CONTRACTION
+    over the quotient graph (the MapReduce-CC family of Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14 — public).
     Per round:
 
@@ -58,15 +67,24 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     (see :func:`meza_spark.util.barrier` for the BigInteger planning
     blowup this prevents).
     """
-    # symmetrize with ONE scan of the (possibly expensive) pair
-    # subtree: explode each pair into both directions — a union of the
-    # frame with its swap would execute pair generation twice
-    a, b = F.col(id_a).cast("long"), F.col(id_b).cast("long")
-    edges = (pairs.select(F.explode(F.array(
-        F.struct(a.alias("s"), b.alias("d")),
-        F.struct(b.alias("s"), a.alias("d")))).alias("e"))
-        .select("e.s", "e.d").distinct())
-    edges = edges.localCheckpoint(eager=False)
+    t, spark = small_quotient_threshold, pairs.sparkSession
+    # one lazy cut: the pair subtree runs once, whichever path reads it
+    raw = (pairs.select(F.col(id_a).cast("long").alias("s"),
+                        F.col(id_b).cast("long").alias("d"))
+           .localCheckpoint(eager=False))
+    pdf = raw.limit(t + 1).toPandas()
+    if len(pdf) <= t:
+        # an empty pandas frame would leave Arrow for an RDD of unknown
+        # size; limit(0) plans as an empty local relation instead
+        roots = _union_find(pdf, "id", "component")
+        return (spark.createDataFrame(roots) if len(roots)
+                else raw.toDF("id", "component").limit(0))
+    # symmetrize: explode each pair of the cut into both directions
+    edges = (raw.select(F.explode(F.array(
+        F.struct("s", "d"),
+        F.struct(F.col("d").alias("s"), F.col("s").alias("d")))).alias("e"))
+        .select("e.s", "e.d").distinct()
+        .localCheckpoint(eager=False))
     # init folds the first propagation in: label₀(v) = min(v, min
     # neighbor) — the groupBy doubles as the distinct-vertices pass
     # (every vertex appears as `s` in the symmetrized edge list), and
@@ -76,76 +94,30 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                       F.least("s", "_nd").alias("label"))
               .localCheckpoint(eager=False))
     out_cols = [F.col("v").alias("id"), F.col("label").alias("component")]
-    if not labels.head(1):  # no edges → empty result
-        return labels.select(*out_cols)
     # contracted (quotient) edge set: current labels of each endpoint
     lmap = lambda side: labels.select(  # noqa: E731
         F.col("v").alias(side), F.col("label").alias(f"_n{side}"))
     ce = (edges.join(lmap("s"), on="s").join(lmap("d"), on="d")
           .select(F.col("_ns").alias("s"), F.col("_nd").alias("d"))
-          .where(F.col("s") != F.col("d")).distinct())
-    # First quotient: one lazy lineage cut, materialized by the count
-    # that decides WHICH path runs. The fast path reads the cut once
-    # (the toPandas below); the distributed loop re-references it
-    # every round without recomputing the init hop.
-    ce = ce.localCheckpoint(eager=False)
-    n_ce = ce.count()
-
-    # Small-quotient fast path: after the init hop, duplicate clusters
-    # have largely collapsed; when the REMAINING quotient graph fits
-    # comfortably on the driver (ids only, 16 B/edge), finish it with
-    # one in-memory union-find and a single broadcast-join re-point —
-    # replacing O(log D) distributed rounds (each ~6 jobs of
-    # persist/count/checkpoint barriers) with 2 jobs. At real scale
-    # the first-round quotient is still huge and the distributed loop
-    # below runs unchanged. Correctness: at this point every vertex
-    # label points at a quotient NODE (one init hop, no stale chains
-    # yet), and the union-find map covers every quotient node, so one
-    # re-point reaches the final roots — no chase loop needed.
-    # ``small_quotient_threshold`` is exposed so tests can force the
-    # distributed loop (set 0) and keep it regression-covered.
-    if 0 < n_ce <= small_quotient_threshold:
-        parent: dict = {}
-
-        def _find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        pdf = ce.toPandas()  # one Arrow job (checkpoint read); ids only
-        for a_, b_ in zip(pdf["s"].to_numpy().tolist(),
-                          pdf["d"].to_numpy().tolist()):
-            ra, rb = _find(a_), _find(b_)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        import pandas as pd
-
-        roots = pd.DataFrame({"label": list(parent),
-                              "_root": [_find(x) for x in parent]})
-        spark = pairs.sparkSession
-        rmap = spark.createDataFrame(roots)
+          .where(F.col("s") != F.col("d")).distinct()
+          .localCheckpoint(eager=False))
+    # the first quotient's cut: the bounded collect reads it once, the
+    # loop re-references it without recomputing the init hop
+    qdf = ce.limit(t + 1).toPandas()
+    n_ce = len(qdf)
+    if n_ce == 0:
+        # no cross-label edge: the init labels are the fixpoint (a
+        # vertex with label(label(v)) < label(v) would leave one)
+        return labels.select(*out_cols)
+    if n_ce <= t:
+        # every vertex label points at a quotient NODE (one init hop,
+        # no stale chains yet) and the union-find map covers every
+        # quotient node, so one re-point reaches the final roots
+        rmap = spark.createDataFrame(_union_find(qdf, "label", "_root"))
         return (labels.join(F.broadcast(rmap), on="label", how="left")
                 .select(F.col("v").alias("id"),
                         F.coalesce("_root", "label").alias("component")))
-
-    if n_ce == 0:
-        # no contraction round will run (quotient has no cross-label
-        # edges): the init labels are already the fixpoint — if any
-        # vertex had label(label(v)) < label(v), the edge between them
-        # would be a cross-label quotient edge (r2 verdict #5
-        # early-exit).
-        return labels.select(*out_cols)
-    # One count job per round, not two (r2 verdict #5): ce depends on
-    # the new labels, so ``barrier(ce, labels)`` fills both caches —
-    # and records measured stats for each — with a single count.
     for _ in range(max_iter):
-        if n_ce == 0:  # quotient has no edges → fully merged
-            break
         # 1) min neighbor label per label-node on the quotient graph
         m = ce.groupBy("s").agg(F.min("d").alias("nl"))
         # 2) vertex labels re-point: label := min(label, m[label])
@@ -160,6 +132,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
               .select(F.col("_ns").alias("s"), F.col("_nd").alias("d"))
               .where(F.col("s") != F.col("d")).distinct())
         ce, labels, n_ce = barrier(ce, labels)
+        if n_ce == 0:  # quotient has no edges → fully merged
+            break
     # resolution: contraction leaves a union-find FOREST — a vertex may
     # point at a label-node that itself merged later. Chase
     # label(v) ← label(label(v)) to the fixpoint; fixpoints are exactly
@@ -181,6 +155,26 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             break
         prev = cur
     return labels.select(*out_cols)
+
+
+def _union_find(edges: pd.DataFrame, v: str, root: str) -> pd.DataFrame:
+    """Driver-side union-find over the ``(s, d)`` rows of ``edges``: one
+    row per vertex ``v``, with ``root`` its component's min vertex."""
+    parent: dict = {}
+
+    def find(x):
+        r = parent.setdefault(x, x)
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in zip(edges["s"].tolist(), edges["d"].tolist()):
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return pd.DataFrame({v: list(parent), root: [find(x) for x in parent]},
+                        dtype="int64")
 
 
 def near_dedup(df: DataFrame, method: str = "minhash",

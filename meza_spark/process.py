@@ -842,8 +842,8 @@ def slice_rows(df: DataFrame, order_by: str | Sequence[str],
       2. pass 1: count rows per partition — a partitions-sized agg;
       3. cumulative offsets on the driver (O(partitions) integers);
       4. pass 2: keep rows where ``offset[pid] + local_index`` falls
-         in [first, last], via a broadcast join against the tiny
-         offset table. The local index comes from
+         in [first, last], reading ``offset[pid]`` from one literal
+         array of the offsets (no join). The local index comes from
          ``monotonically_increasing_id``'s documented layout
          (partition id in the upper bits, the within-partition record
          number in the lower 33).

@@ -21,8 +21,9 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     (MinHash/SimHash signatures, media decode) a pre-repartition costs a
     tiny shuffle and unlocks full parallelism — measured 2.7x on
     signature computation locally. At 100 TB inputs have thousands of
-    row groups and this becomes a no-op (partitions >= target), so it is
-    safe to leave on: the check is metadata-only, no job is triggered.
+    row groups and this becomes a no-op (partitions >= target). A frame
+    that shuffles is returned as is (AQE coalescing sets its count, and
+    probing it via ``df.rdd`` runs the shuffle as an extra job).
 
     Not for cheap scans/aggregations — a shuffle before a map-side
     partial agg only adds cost (measured q1: 0.4s -> 0.8s).
@@ -33,7 +34,7 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     keeps every spread-guarded operator (media decode, signatures)
     legal inside readStream → writeStream DAGs.
     """
-    if df.isStreaming:
+    if df.isStreaming or plan_stats(df)["exchanges"]:
         return df
     target = df.sparkSession.sparkContext.defaultParallelism * factor
     if df.rdd.getNumPartitions() < target:
@@ -92,12 +93,15 @@ def range_offsets(df: DataFrame, keys: str | Sequence[str],
     its within-partition record number ``_idx``
     (``monotonically_increasing_id``'s documented low 33 bits). A lazy
     lineage cut freezes that layout, so both passes read identical
-    partition contents. Pass 1 sums ``weight`` (or counts rows) per
+    partition contents (under AQE, ``localCheckpoint(eager=False)``
+    still runs every upstream shuffle stage at call time; it defers
+    only the final stage). Pass 1 sums ``weight`` (or counts rows) per
     partition — a partitions-sized agg; the driver folds the sums into
-    exclusive offsets (O(partitions) integers); pass 2 broadcast-joins
-    them as ``_off``. Returns ``(tagged, total)``: ``_pid``, ``_idx``,
-    ``_off`` added to ``df``'s columns, and the sum over all rows. An
-    empty ``df`` gives an empty ``tagged`` and total 0.
+    exclusive offsets (O(partitions) integers, empty partitions get
+    the running total); pass 2 reads ``_off`` from that literal array
+    by ``_pid`` — no join. Returns ``(tagged, total)``: ``_pid``,
+    ``_idx``, ``_off`` added to ``df``'s columns, and the sum over all
+    rows. An empty ``df`` gives an empty ``tagged`` and total 0.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     tagged = (df.repartitionByRange(*[F.col(k) for k in keys])
@@ -107,12 +111,13 @@ def range_offsets(df: DataFrame, keys: str | Sequence[str],
                           .bitwiseAND(F.lit((1 << 33) - 1)))
               .localCheckpoint(eager=False))
     size = F.sum(weight) if weight is not None else F.count("*")
+    sums = dict(tagged.groupBy("_pid").agg(size).collect())
     offsets, total = [], 0
-    for pid, s in sorted(tagged.groupBy("_pid").agg(size).collect()):
-        offsets.append((pid, total))
-        total += s or 0
-    off = df.sparkSession.createDataFrame(offsets, "_pid int, _off long")
-    return tagged.join(F.broadcast(off), on="_pid"), total
+    for pid in range(max(sums, default=-1) + 1):
+        offsets.append(total)
+        total += sums.get(pid) or 0
+    off = F.array(*map(F.lit, offsets)).cast("array<bigint>")[F.col("_pid")]
+    return tagged.withColumn("_off", off), total
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:

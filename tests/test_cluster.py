@@ -268,3 +268,40 @@ def test_near_dedup_incremental_cross_and_intra(spark):
     assert sorted(r["doc_id"] for r in kept2.collect()) == [2, 4]
     # columns survive records-in/records-out
     assert kept.columns == new.columns
+
+
+def _plain_union_find(edges):
+    comp = {}
+    for a, b in edges:
+        ca, cb = comp.setdefault(a, {a}), comp.setdefault(b, {b})
+        if ca is not cb:
+            ca |= cb
+            for v in cb:
+                comp[v] = ca
+    return {v: min(c) for v, c in comp.items()}
+
+
+# 5 pairs whose first quotient has 4 directed edges (2-3, 3-4 both ways)
+_FIVE = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)]
+
+
+@pytest.mark.parametrize("edges,t,collected", [
+    (_FIVE, 5, 5),        # len(pairs) == t: pair-level union-find
+    (_FIVE, 4, 4),        # pairs > t, quotient <= t: quotient union-find
+    (_FIVE, 0, None),     # t = 0: distributed loop, no union-find
+    ([], 5, 0), ([], 4, 0), ([], 0, 0),  # empty pairs on every path
+])
+def test_cc_paths_match_plain_union_find(spark, monkeypatch, edges, t,
+                                         collected):
+    from meza_spark.llm import cluster
+
+    seen = []
+    real = cluster._union_find
+    monkeypatch.setattr(cluster, "_union_find",
+                        lambda e, *cols: seen.append(len(e)) or real(e, *cols))
+    comp = connected_components(
+        spark.createDataFrame(edges, "id_a long, id_b long"),
+        small_quotient_threshold=t)
+    got = {r["id"]: r["component"] for r in comp.collect()}
+    assert got == _plain_union_find(edges)
+    assert seen == ([] if collected is None else [collected])

@@ -1,4 +1,5 @@
-"""Materialization: no operator leaves a Dataset cache behind.
+"""Materialization: no operator leaves a Dataset cache behind, and
+none launches a Spark job its data does not need.
 
 Operators are records in, records out; the only Dataset cache the
 engine takes is the stats barrier in ``meza_spark.util.barrier``, which
@@ -17,6 +18,7 @@ from meza_spark.llm.cluster import connected_components
 from meza_spark.llm.sampling import global_shuffle, pack_sequences, \
     pack_shards
 from meza_spark.process import slice_rows, unique
+from meza_spark.util import explain_str, plan_stats, range_offsets, spread
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -80,3 +82,73 @@ def test_dataset_cache_only_in_barrier():
              if not (p == util and line in inside)]
     assert not stray, stray
     assert any(line in inside for line in _cache_calls(util))
+
+
+def _jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn launched)``."""
+    sc = spark.sparkContext
+    bus, tracker = sc._jsc.sc().listenerBus(), sc.statusTracker()
+    bus.waitUntilEmpty(60_000)
+    before = set(tracker.getJobIdsForGroup())
+    out = fn()
+    bus.waitUntilEmpty(60_000)
+    return out, len(set(tracker.getJobIdsForGroup()) - before)
+
+
+def test_spread_after_a_shuffle_launches_no_job(spark):
+    # asking a shuffled frame for its partition count runs the shuffle
+    agg = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+    out, jobs = _jobs(spark, lambda: spread(agg))
+    assert (out is agg, jobs) == (True, 0)
+
+
+def test_spread_widens_a_one_partition_scan(spark):
+    one = spark.range(0, 10, 1, numPartitions=1)
+    out, jobs = _jobs(spark, lambda: spread(one))
+    assert (jobs, plan_stats(out)["exchanges"]) == (0, 1)
+    assert "RoundRobinPartitioning" in explain_str(out, "simple")
+
+
+def test_small_pair_graph_is_one_job(spark):
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)], "id_a long, id_b long")
+    comp, jobs = _jobs(spark, lambda: connected_components(pairs))
+    assert jobs == 1
+    assert sorted(map(tuple, comp.collect())) == [
+        (1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (20, 20),
+        (21, 20)]
+
+
+def test_offsets_are_not_joined(spark):
+    df = spark.range(50).select(F.col("id").alias("k"), F.lit(2).alias("w"))
+    assert plan_stats(pack_shards(df, "w", 7, "k"))["broadcast_joins"] == 0
+
+
+def test_range_offsets_over_empty_partitions(spark):
+    # a skewed key leaves trailing range partitions empty once AQE no
+    # longer coalesces them; rows with equal keys are identical, so
+    # every order of ties gives the same (k, w, ...) multiset
+    n, budget = 40, 7
+    df = spark.range(n).select(F.least("id", F.lit(5)).alias("k")) \
+        .withColumn("w", F.col("k") % 3 + 1)
+    ref = df.toPandas().sort_values("k", kind="stable")
+    ref["shard_id"] = (ref["w"].cumsum() - ref["w"]) // budget
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        tagged, total = range_offsets(df, "k")
+        pids = {r[0] for r in tagged.select("_pid").distinct().collect()}
+        assert len(pids) < tagged.rdd.getNumPartitions()
+        assert total == n
+        assert sorted(r[0] for r in tagged.select(
+            F.col("_off") + F.col("_idx")).collect()) == list(range(n))
+        packed = sorted(map(tuple, pack_shards(df, "w", budget, "k")
+                            .select("k", "w", "shard_id").collect()))
+        sliced = sorted(r[0] for r in slice_rows(df, "k", first=3, last=38)
+                        .select("k").collect())
+    finally:
+        spark.conf.set(conf, old)
+    assert packed == sorted(
+        ref[["k", "w", "shard_id"]].itertuples(index=False, name=None))
+    assert sliced == ref["k"].tolist()[2:38]
