@@ -17,13 +17,21 @@ GC/catalog/codegen-cache pressure that uniformly inflates later
 queries by +0.3-0.8 s, making cross-round per-query diffs noise. The
 headline list therefore runs in fixed-size batches of
 $SPARK_GRAFT_BATCH_SIZE (default 40), each in a FRESH subprocess JVM
-with the standard warmup. Keep batch composition stable across rounds:
+with the standard warmup. HEADLINE is the one ordered list of benched
+queries: batches are cut from its order, not from the registry's
+(``queries()`` follows the order of the builders in
+__spark_entry__.py). Keep batch composition stable across rounds:
 append new queries at the END of HEADLINE so existing batches keep
 their predecessor sets. SPARK_GRAFT_BATCH_SIZE=0 restores the single
 session. (The three r3->r4 query-level "regressions" were adjudicated
 environmental: interleaved fresh-JVM A/B of the r3 commit vs r5 HEAD
 on identical data gave dedup_minhash_lsh 1.976 vs 1.971 s,
 embed_ann_ivfpq 1.209 vs 1.080 s — see BENCH_NOTES.md.)
+
+A headline query whose input is absent on this host
+(``__spark_entry__.unavailable()``, e.g. the golden_* gates without
+the reference checkout) is skipped, listed under "unavailable" in
+BENCH_DETAIL.json and counted in the last-line JSON.
 """
 
 from __future__ import annotations
@@ -381,6 +389,14 @@ def _warmup(spark, qs, sf_dir: str):
     _lpa(toy, n_iter=3).write.format("noop").mode("overwrite").save()
 
 
+def _queries(entry) -> dict:
+    """The registry minus the queries ``entry.unavailable()`` names."""
+    qs = entry.queries()
+    for name in entry.unavailable():
+        del qs[name]
+    return qs
+
+
 def _time_queries(spark, qs, names, sf_dir: str) -> dict:
     times = {}
     for name in names:
@@ -406,7 +422,7 @@ def _child_main():
     start, end = map(int, os.environ["SPARK_GRAFT_BATCH"].split(":"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = _open_session(entry)
-    qs = entry.queries()
+    qs = _queries(entry)
     sf_dir, layout = _prepare_layout(spark, sf_dir)
     _warmup(spark, qs, sf_dir)
     times = _time_queries(spark, qs, HEADLINE[start:end], sf_dir)
@@ -468,15 +484,17 @@ def main():
         times, pass_totals, layout = _run_batched(batch_size, n_passes)
         if os.environ.get("SPARK_GRAFT_SPLIT", "1") != "0":
             sf_dir = f"/tmp/meza_bench_split_sf{sf}"
-        qs = entry.queries()
+        qs = _queries(entry)
     else:
         spark = _open_session(entry)
-        qs = entry.queries()
+        qs = _queries(entry)
         sf_dir, layout = _prepare_layout(spark, sf_dir)
         _warmup(spark, qs, sf_dir)
         times = _time_queries(spark, qs, HEADLINE, sf_dir)
     cpu_after = _cpu_microbench()
     total = sum(times.values())
+    missing = entry.unavailable()
+    unavailable = [n for n in HEADLINE if n in missing]
 
     out = {
         "metric": "headline_queries_total_sec",
@@ -484,6 +502,7 @@ def main():
         "unit": "sec",
         "queries": times,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "unavailable": unavailable,
         # drift self-adjudication (r7 verdict #2): flat cpu_sec with
         # agreeing pass totals = a clean record; flat cpu_sec with
         # diverging passes = host contention, trust the per-query min
@@ -548,6 +567,7 @@ def main():
     print(json.dumps({
         "metric": out["metric"], "value": out["value"], "unit": out["unit"],
         "sf": out["sf"], "n_queries": len(times),
+        "unavailable": len(unavailable),
         "cpu_sec": cpu_before,
         "pass_totals_sec": pass_totals or None,
         "fixed10_total_sec": out["calibration"]["fixed10_total_sec"],

@@ -6,6 +6,10 @@ order-insensitive value hash (cells normalized to strings, rows sorted).
 
 Usage: python tools/oracle_check.py [--strict-types] [sf_dir] [query ...]
 
+A query whose input is absent on this host (``unavailable()`` in
+``__spark_entry__``, e.g. the golden_* gates without the reference
+checkout) prints UNAVAILABLE and is counted apart from the failures.
+
 ``--strict-types`` disables the float→int folding in ``norm_cell`` so a
 DuckDB float64 ``3.0`` no longer hashes equal to Spark's int ``3`` —
 the driver's hash is strict, and round 4 showed the lenient local mode
@@ -93,6 +97,7 @@ def main():
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
+    missing = entry.unavailable()
     # VALUES-pinned oracles apply at the SF they were captured at
     # (r8: both 0.01 and 0.1 are captured, so SCALE_DIFF covers the
     # full registry); any other SF reports PINNED-SKIP.
@@ -109,6 +114,9 @@ def main():
     results = []
     for name, fn in qs.items():
         if only and name not in only:
+            continue
+        if name in missing:
+            results.append((name, "UNAVAILABLE", f"{missing[name]} is absent"))
             continue
         if name in pinned_names:
             results.append((name, "PINNED-SKIP",
@@ -145,11 +153,14 @@ def main():
     fails = 0
     for name, status, detail in results:
         mark = "✓" if status == "OK" else (
-            "~" if status in ("ROWS-ONLY", "PINNED-SKIP") else "✗")
+            "~" if status in ("ROWS-ONLY", "PINNED-SKIP") else
+            "-" if status == "UNAVAILABLE" else "✗")
         if mark == "✗":
             fails += 1
         print(f"{mark} {name:24s} {status:18s} {detail}")
-    print(f"\n{len(results)} queries, {fails} failing")
+    n_unavail = sum(status == "UNAVAILABLE" for _, status, _ in results)
+    print(f"\n{len(results)} queries, {fails} failing, "
+          f"{n_unavail} unavailable")
     sys.exit(1 if fails else 0)
 
 

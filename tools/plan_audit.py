@@ -12,6 +12,8 @@ the plan features that matter at 100 TB:
   - scans with pushed filters
 
 Writes PLANS.md (one row per query) + a hazard summary to stdout.
+A query whose input is absent on this host (``unavailable()`` in
+``__spark_entry__``) keeps the row the existing PLANS.md has for it.
 Usage: python tools/plan_audit.py [sf_dir] [out_md]
 """
 
@@ -30,6 +32,19 @@ def _plan(df, mode="formatted"):
     return explain_str(df, mode)
 
 
+def _rows_in(md: str) -> dict[str, tuple]:
+    """query -> cells of each table row in an existing PLANS.md."""
+    if not os.path.exists(md):
+        return {}
+    rows = {}
+    with open(md) as f:
+        for ln in f:
+            cells = tuple(c.strip() for c in ln.strip()[1:-1].split("|"))
+            if ln.startswith("| ") and len(cells) == 7:
+                rows[cells[0]] = cells
+    return rows
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     out_md = sys.argv[2] if len(sys.argv) > 2 else "PLANS.md"
@@ -42,7 +57,15 @@ def main():
 
     rows = []
     hazards = []
+    missing = entry.unavailable()
+    kept = _rows_in(out_md)
     for name, fn in sorted(entry.queries().items()):
+        if name in missing:
+            rows.append(kept.get(name) or (
+                name, "-", "-", "-", "-", "-",
+                f"unavailable: {missing[name]} is absent"))
+            print(f"{name}: unavailable, row kept")
+            continue
         try:
             df = fn(spark, sf_dir)
             simple = _plan(df, "simple")
