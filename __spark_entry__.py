@@ -6451,8 +6451,8 @@ def hello_world_pipeline(spark, sf_dir):
     return pr.merge(numeric, op="max", pred=lambda c: True)
 
 
-_REF_DATA = "/root/reference/data"
-_REF_TEST = f"{_REF_DATA}/test"
+_REF_TEST = "/root/reference/data/test"
+_REF_DATA = os.path.dirname(_REF_TEST)
 
 
 # EXTERNAL golden gates: the twin is the reference's OWN

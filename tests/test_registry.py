@@ -56,7 +56,7 @@ import pandas as pd
 import __spark_entry__ as e
 from meza_spark.session import get_spark
 
-sf = "/root/testdata/sf0.001"
+sf = {sf!r}
 s1 = get_spark("restart_a", master="local[1]", shuffle_partitions=1)
 e.cut_project(s1, sf).collect()
 stopped = id(s1)
@@ -75,12 +75,13 @@ s2.stop()
 """
 
 
-def test_t_memo_drops_a_stopped_session():
+def test_t_memo_drops_a_stopped_session(sf_dir):
     # a subprocess, so the shared session fixture is never stopped
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
-    out = subprocess.run(
-        [sys.executable, "-c", _RESTART.format(root=ROOT)], env=env,
-        capture_output=True, text=True, timeout=600, check=True)
+    script = _RESTART.format(root=ROOT, sf=sf_dir)
+    out = subprocess.run([sys.executable, "-c", script], env=env,
+                         capture_output=True, text=True, timeout=600,
+                         check=True)
     res = json.loads(out.stdout.strip().splitlines()[-1])
     assert res["correct"] and res["rows"] > 0
     assert res["stale"] == 0
