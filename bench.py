@@ -422,10 +422,13 @@ def _child_main():
     start, end = map(int, os.environ["SPARK_GRAFT_BATCH"].split(":"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = _open_session(entry)
-    qs = _queries(entry)
-    sf_dir, layout = _prepare_layout(spark, sf_dir)
-    _warmup(spark, qs, sf_dir)
-    times = _time_queries(spark, qs, HEADLINE[start:end], sf_dir)
+    try:
+        qs = _queries(entry)
+        sf_dir, layout = _prepare_layout(spark, sf_dir)
+        _warmup(spark, qs, sf_dir)
+        times = _time_queries(spark, qs, HEADLINE[start:end], sf_dir)
+    finally:
+        spark.stop()
     with open(os.environ["SPARK_GRAFT_BATCH_OUT"], "w") as f:
         json.dump({"times": times, "layout": layout}, f)
 
@@ -480,83 +483,87 @@ def main():
     cpu_before = _cpu_microbench()
     spark = None
     pass_totals: list = []
-    if batch_size > 0:
-        times, pass_totals, layout = _run_batched(batch_size, n_passes)
-        if os.environ.get("SPARK_GRAFT_SPLIT", "1") != "0":
-            sf_dir = f"/tmp/meza_bench_split_sf{sf}"
-        qs = _queries(entry)
-    else:
-        spark = _open_session(entry)
-        qs = _queries(entry)
-        sf_dir, layout = _prepare_layout(spark, sf_dir)
-        _warmup(spark, qs, sf_dir)
-        times = _time_queries(spark, qs, HEADLINE, sf_dir)
-    cpu_after = _cpu_microbench()
-    total = sum(times.values())
-    missing = entry.unavailable()
-    unavailable = [n for n in HEADLINE if n in missing]
-
-    out = {
-        "metric": "headline_queries_total_sec",
-        "value": round(total, 3),
-        "unit": "sec",
-        "queries": times,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "unavailable": unavailable,
-        # drift self-adjudication (r7 verdict #2): flat cpu_sec with
-        # agreeing pass totals = a clean record; flat cpu_sec with
-        # diverging passes = host contention, trust the per-query min
-        "calibration": {
-            "cpu_sec": [cpu_before, cpu_after],
-            "pass_totals_sec": pass_totals,
-            "pass_spread": (round(max(pass_totals) / min(pass_totals), 3)
-                            if len(pass_totals) >= 2 and min(pass_totals)
-                            else None),
-            "fixed10_total_sec": round(
-                sum(times.get(n, 0.0) for n in FIXED10), 3),
-            "fixed10": {n: times[n] for n in FIXED10 if n in times},
-        },
-    }
-    if layout is not None:
-        out["layout"] = layout
-
-    # scaling slope: same join/agg headliners at a 10× synthetic SF.
-    # sub-linear slope (t_x10 / t_x1 < 10) = fixed overhead amortizing;
-    # super-linear = a real scale problem. Opt out: SPARK_GRAFT_SCALE=0.
-    if os.environ.get("SPARK_GRAFT_SCALE", "1") != "0" and sf == "0.1":
-        if spark is None:  # batched mode: scale section gets its own
-            spark = _open_session(entry)  # fresh session, same warmup
+    try:
+        if batch_size > 0:
+            times, pass_totals, layout = _run_batched(batch_size, n_passes)
+            if os.environ.get("SPARK_GRAFT_SPLIT", "1") != "0":
+                sf_dir = f"/tmp/meza_bench_split_sf{sf}"
+            qs = _queries(entry)
+        else:
+            spark = _open_session(entry)
+            qs = _queries(entry)
+            sf_dir, layout = _prepare_layout(spark, sf_dir)
             _warmup(spark, qs, sf_dir)
-        scale_dir = f"/tmp/meza_bench_sf{sf}_x{SCALE_FACTOR}"
-        t0 = time.time()
-        _build_scaled(spark, entry, sf_dir, scale_dir)
-        gen_sec = round(time.time() - t0, 3)
-        # self-adjudication (r8 verdict task #3), same contract as the
-        # headline: TWO interleaved whole-list passes, per-query min
-        # as canonical, pass totals + spread recorded inline — a
-        # single drifted sample can no longer masquerade as a
-        # super-linear slope
-        s_passes = [_time_queries(spark, qs, SCALE_QUERIES, scale_dir)
-                    for _ in range(max(1, n_passes))]
-        stimes = {n: min(p[n] for p in s_passes if n in p)
-                  for n in s_passes[0]}
-        s_totals = [round(sum(p.values()), 3) for p in s_passes]
-        # the 10x key-shifted replica of sf0.1 IS the sf1-scale dataset
-        # (r2 verdict #8): generated once, persisted at scale_dir and
-        # reused across runs (gen_sec==0 on reuse); slopes are t_sf1/t_sf0.1
-        out["sf1_replica"] = {
-            "factor": SCALE_FACTOR, "gen_sec": gen_sec,
-            "persisted_at": scale_dir,
-            "queries": stimes,
-            "total_sec": round(sum(stimes.values()), 3),
-            "pass_totals_sec": s_totals,
-            "pass_spread": (round(max(s_totals) / min(s_totals), 3)
-                            if len(s_totals) >= 2 and min(s_totals)
-                            else None),
-            "slope_vs_sf0.1": {
-                n: round(stimes[n] / times[n], 2)
-                for n in stimes if times.get(n)},
+            times = _time_queries(spark, qs, HEADLINE, sf_dir)
+        cpu_after = _cpu_microbench()
+        total = sum(times.values())
+        missing = entry.unavailable()
+        unavailable = [n for n in HEADLINE if n in missing]
+
+        out = {
+            "metric": "headline_queries_total_sec",
+            "value": round(total, 3),
+            "unit": "sec",
+            "queries": times,
+            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            "unavailable": unavailable,
+            # drift self-adjudication: flat cpu_sec with
+            # agreeing pass totals = a clean record; flat cpu_sec with
+            # diverging passes = host contention, trust the per-query min
+            "calibration": {
+                "cpu_sec": [cpu_before, cpu_after],
+                "pass_totals_sec": pass_totals,
+                "pass_spread": (round(max(pass_totals) / min(pass_totals), 3)
+                                if len(pass_totals) >= 2 and min(pass_totals)
+                                else None),
+                "fixed10_total_sec": round(
+                    sum(times.get(n, 0.0) for n in FIXED10), 3),
+                "fixed10": {n: times[n] for n in FIXED10 if n in times},
+            },
         }
+        if layout is not None:
+            out["layout"] = layout
+
+        # scaling slope: same join/agg headliners at a 10× synthetic SF.
+        # sub-linear slope (t_x10 / t_x1 < 10) = fixed overhead amortizing;
+        # super-linear = a real scale problem. Opt out: SPARK_GRAFT_SCALE=0.
+        if os.environ.get("SPARK_GRAFT_SCALE", "1") != "0" and sf == "0.1":
+            if spark is None:  # batched mode: scale section gets its own
+                spark = _open_session(entry)  # fresh session, same warmup
+                _warmup(spark, qs, sf_dir)
+            scale_dir = f"/tmp/meza_bench_sf{sf}_x{SCALE_FACTOR}"
+            t0 = time.time()
+            _build_scaled(spark, entry, sf_dir, scale_dir)
+            gen_sec = round(time.time() - t0, 3)
+            # self-adjudication, same contract as the
+            # headline: TWO interleaved whole-list passes, per-query min
+            # as canonical, pass totals + spread recorded inline — a
+            # single drifted sample can no longer masquerade as a
+            # super-linear slope
+            s_passes = [_time_queries(spark, qs, SCALE_QUERIES, scale_dir)
+                        for _ in range(max(1, n_passes))]
+            stimes = {n: min(p[n] for p in s_passes if n in p)
+                      for n in s_passes[0]}
+            s_totals = [round(sum(p.values()), 3) for p in s_passes]
+            # the 10x key-shifted replica of sf0.1 IS the sf1-scale
+            # dataset: generated once, persisted at scale_dir and reused
+            # across runs (gen_sec==0 on reuse); slopes are t_sf1/t_sf0.1
+            out["sf1_replica"] = {
+                "factor": SCALE_FACTOR, "gen_sec": gen_sec,
+                "persisted_at": scale_dir,
+                "queries": stimes,
+                "total_sec": round(sum(stimes.values()), 3),
+                "pass_totals_sec": s_totals,
+                "pass_spread": (round(max(s_totals) / min(s_totals), 3)
+                                if len(s_totals) >= 2 and min(s_totals)
+                                else None),
+                "slope_vs_sf0.1": {
+                    n: round(stimes[n] / times[n], 2)
+                    for n in stimes if times.get(n)},
+            }
+    finally:
+        if spark is not None:
+            spark.stop()
 
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")

@@ -158,17 +158,6 @@ def _fuzzy_ts_fn(s: pd.Series) -> pd.Series:
     return s.map(parse)
 
 
-_fuzzy_ts_udf = None
-
-
-def _fuzzy_ts(c: Column) -> Column:
-    """Lazily register the fuzzy-date pandas UDF (needs a live session)."""
-    global _fuzzy_ts_udf
-    if _fuzzy_ts_udf is None:
-        _fuzzy_ts_udf = pandas_udf(_fuzzy_ts_fn, "timestamp")
-    return _fuzzy_ts_udf(c)
-
-
 def to_datetime(c: Column, fuzzy: bool = False) -> Column:
     """Tiered timestamp cast (ref: meza/convert.py:374-436).
 
@@ -213,7 +202,8 @@ def to_datetime(c: Column, fuzzy: bool = False) -> Column:
     # input to null where the native tiers already parsed: the Arrow
     # transfer still happens, but dateutil (the expensive part) only
     # runs on actual tier-1 misses.
-    return F.coalesce(native, _fuzzy_ts(F.when(native.isNull(), s)))
+    fuzzy_ts = pandas_udf(_fuzzy_ts_fn, "timestamp")
+    return F.coalesce(native, fuzzy_ts(F.when(native.isNull(), s)))
 
 
 def to_date(c: Column, fuzzy: bool = False) -> Column:
@@ -257,8 +247,10 @@ _CASTERS = {
 # type_cast projection (rebuilt twice per bench timing). The tree is
 # a pure function of (type, column name, fuzzy) and Column expression
 # trees are immutable (Catalyst never mutates an unresolved
-# expression; they are not bound to a session), so cache them per
-# process. Plan metadata only — no data, no results.
+# expression), so cache them. Keyed by SparkContext: a fuzzy caster
+# holds a pandas UDF bound to its context's Python accumulator, which
+# a stopped context no longer serves. Plan metadata only — no data,
+# no results.
 _CAST_MEMO: dict[tuple, Column] = {}
 
 
@@ -270,12 +262,15 @@ def type_cast(df: DataFrame, types: Sequence[dict], fuzzy: bool = True) -> DataF
     date, time, datetime, text, iden.
     """
     by_field = {t["id"]: t["type"] for t in types}
+    sc = df.sparkSession.sparkContext
     cols = []
     for name in df.columns:
         t = by_field.get(name, "iden")
-        key = (t, name, bool(fuzzy))
+        key = (sc, t, name, bool(fuzzy))
         col = _CAST_MEMO.get(key)
         if col is None:
+            for k in [k for k in _CAST_MEMO if k[0] is not sc]:
+                del _CAST_MEMO[k]
             if not fuzzy and t in ("date", "datetime"):
                 col = (to_datetime(F.col(name)).cast(
                     "date" if t == "date" else "timestamp")).alias(name)

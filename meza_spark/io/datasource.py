@@ -3,21 +3,23 @@
 SURVEY §4.2.3: xls(x)/yaml/html/geojson can't be split inside a file —
 the scale unit is the FILE. This source makes that explicit in the
 engine's own vocabulary: ``spark.read.format("meza")`` plans **one
-input partition per file**, each parsed on an executor with the same
-pure-python parsers the ``read_*`` functions use; a directory of 10k
-xlsx exports becomes a 10k-task scan, which is exactly how far such
-formats parallelize.
+input partition per file**, each parsed on an executor by the record
+function its ``read_*`` reader runs per file (``read_xls``,
+``read_yaml``, ``read_html``, ``read_geojson``, default options); a
+directory of 10k xlsx exports becomes a 10k-task scan, which is
+exactly how far such formats parallelize.
 
 Usage::
 
     spark.dataSource.register(MezaDataSource)
     df = (spark.read.format("meza")
           .option("path", "/data/exports")      # file or directory
-          .option("fmt", "xlsx")                # xlsx|yaml|geojson|html
+          .option("fmt", "xlsx")                # xlsx|xls|yaml|geojson|html
           .load())
 
-Contract: all columns are strings in first-seen order (meza's reader
-contract — type them with ``detect_types`` + ``type_cast``). The schema
+Contract: the ``read_*`` records as strings (null stays null), columns
+in first-seen order (meza's reader contract — type them with
+``detect_types`` + ``type_cast``). The schema
 comes from a driver parse of the first file; ragged files fill missing
 keys with null (SURVEY §1.1).
 """
@@ -27,39 +29,19 @@ from __future__ import annotations
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .readers import (_all_files, _geojson_records, _html_records,
+                      _xls_records, _yaml_records)
+
 __all__ = ["MezaDataSource", "register"]
 
-_FMTS = ("xlsx", "xls", "yaml", "yml", "geojson", "html", "htm")
-
-
-def _parse(fmt: str, path: str) -> list[dict]:
-    from . import readers as R
-
-    if fmt in ("xlsx", "xls"):
-        grid = R._read_xlsx_grid(path)
-        if not grid:
-            return []
-        names = R._clean_header([str(v) for v in grid[0]], sanitize=True)
-        return [dict(zip(names, r)) for r in grid[1:]]
-    if fmt in ("yaml", "yml"):
-        import yaml
-
-        with open(path, encoding="utf-8") as f:
-            data = yaml.safe_load(f)
-        return data if isinstance(data, list) else [data]
-    if fmt == "geojson":
-        return R._geojson_records(path)
-    if fmt in ("html", "htm"):
-        enc = R.detect_encoding(path)
-        with open(path, encoding=enc) as f:
-            tables = R._TableHTMLParser().extract(f.read())
-        if not tables:
-            return []
-        rows = [r for r, _ in tables[0]]
-        names = R._clean_header(rows[0], sanitize=True)
-        return [dict(zip(names, r)) for r in rows[1:]
-                if any(v for v in r)]
-    raise ValueError(f"meza datasource: unsupported fmt {fmt!r}")
+# fmt option → the record function its ``read_*`` reader runs per file
+# (with that reader's default options)
+_RECORDS = {
+    "xlsx": _xls_records, "xls": _xls_records,
+    "yaml": _yaml_records, "yml": _yaml_records,
+    "geojson": _geojson_records,
+    "html": _html_records, "htm": _html_records,
+}
 
 
 class _FilePartition(InputPartition):
@@ -70,9 +52,7 @@ class _FilePartition(InputPartition):
 class _MezaReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
-        self._fmt = options["fmt"].lower()
-        from .readers import _all_files
-
+        self._records = _RECORDS[options["fmt"].lower()]
         self._files = _all_files(options["path"])
 
     def partitions(self):
@@ -80,28 +60,25 @@ class _MezaReader(DataSourceReader):
 
     def read(self, partition: _FilePartition):
         cols = [f.name for f in self._schema.fields]
-        for rec in _parse(self._fmt, partition.path):
+        for rec in self._records(partition.path):
             yield tuple(None if rec.get(c) is None else str(rec.get(c))
                         for c in cols)
 
 
 class MezaDataSource(DataSource):
     """``format("meza")`` — per-file-parallel scan of non-splittable
-    formats (xlsx/yaml/geojson/html)."""
+    formats (xlsx/xls/yaml/geojson/html)."""
 
     @classmethod
     def name(cls) -> str:
         return "meza"
 
     def schema(self):
-        from .readers import _all_files
-
         fmt = self.options.get("fmt", "").lower()
-        if fmt not in _FMTS:
+        if fmt not in _RECORDS:
             raise ValueError(
-                f"option 'fmt' must be one of {_FMTS}, got {fmt!r}")
-        files = _all_files(self.options["path"])
-        rows = _parse(fmt, files[0])
+                f"option 'fmt' must be one of {tuple(_RECORDS)}, got {fmt!r}")
+        rows = _RECORDS[fmt](_all_files(self.options["path"])[0])
         cols: list[str] = []
         seen: set[str] = set()
         for r in rows:

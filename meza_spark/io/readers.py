@@ -13,8 +13,10 @@ Two tiers, by format splittability (SURVEY §4.2.3):
     meza/io.py:598-760,1033-1431).
 
 Encoding detection (ref: meza/io.py:371-431,1579-1614): BOM sniff +
-decode ladder, driver-side per file BEFORE building the scan, because
-Spark's csv reader takes one fixed encoding (SURVEY §4.1).
+decode ladder. ``read_csv`` sniffs the first file on the driver
+BEFORE building the scan, because Spark's csv reader takes one fixed
+encoding (SURVEY §4.1); files Spark cannot scan parse on executors
+(``read_csv_distributed``), which detect per file.
 
 All readers return DataFrames; row dicts are available via
 ``df.toLocalIterator()`` for meza-style consumption.
@@ -23,12 +25,12 @@ All readers return DataFrames; row dicts are available via
 from __future__ import annotations
 
 import csv as _csv
-import io as _pyio
 import json as _json
 import os
 import re
 import struct
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -226,99 +228,69 @@ def read_csv(spark: SparkSession, path: str, has_header: bool = True,
              infer_schema: bool = False) -> DataFrame:
     """CSV → DataFrame (ref: meza/io.py:763-850).
 
-    Fast path (no row/col slicing): pure ``spark.read.csv`` —
-    distributed, splittable, scalable; header hygiene is a driver-side
-    rename. Sliced path (``first_row``/``first_col``/``last_row``,
-    incl. negative ``last_row`` = drop tail, ref io.py:473-479):
-    per-file python csv parse — a compatibility path for the
-    reference's messy-file semantics, not the 100 TB path.
+    Clean files (no row/col slicing, a charset Spark scans, a tail that
+    decodes like the head): pure ``spark.read.csv`` — distributed,
+    splittable, scalable; header hygiene is a driver-side rename.
 
-    ``encoding=None`` auto-detects per file (driver, bounded read).
+    Messy files take ``read_csv_distributed`` (one executor task per
+    file, all columns strings): ``first_row``/``first_col``/``last_row``
+    slicing (incl. negative ``last_row`` = drop tail, ref
+    io.py:473-479), a charset Spark cannot scan (windows-1252,
+    utf-16, ...), or a first file clean early and broken late
+    (detection samples 64 KiB). Each file decodes with mid-stream
+    recovery (ref io.py:481-502); the header comes from the first file.
+
+    ``encoding=None`` auto-detects per file (bounded reads).
     """
-    if encoding is None:
-        encoding = detect_encoding(_first_file(path))
-
+    first = _first_file(path)
+    enc = encoding or detect_encoding(first)
     # Spark's CSVOptions accepts a fixed charset whitelist; map Python
-    # codec names onto it, and fall back to the python path for
-    # charsets Spark can't scan (windows-1252, mac-roman, ...).
-    # (utf-16/32 are whitelisted by Spark but its record splitting on
-    # multi-byte charsets is unreliable — python path handles them)
+    # codec names onto it. (utf-16/32 are whitelisted by Spark but its
+    # record splitting on multi-byte charsets is unreliable.)
     spark_charset = {
         "utf-8": "utf-8", "utf-8-sig": "utf-8", "ascii": "us-ascii",
         "latin-1": "iso-8859-1", "iso-8859-1": "iso-8859-1",
-    }.get(encoding.lower())
-    # head-detected charset must also hold at the END of the file: a
-    # file clean early and broken late (detection samples 64 KiB) must
-    # take the python path, whose decoder recovers mid-stream
-    if spark_charset is not None and not _tail_clean(_first_file(path),
-                                                     encoding):
-        spark_charset = None
-    if spark_charset is None and first_row == 0 and first_col == 0 \
-            and last_row is None:
-        first_row = 0  # force the python path below
-        last_row = 1 << 62
+    }.get(enc.lower())
+    if (spark_charset is None or first_row or first_col
+            or last_row is not None or not _tail_clean(first, enc)):
+        return read_csv_distributed(
+            spark, path, has_header=has_header, custom_header=custom_header,
+            delimiter=delimiter, quotechar=quotechar, encoding=encoding,
+            sanitize=sanitize, dedupe=dedupe, first_row=first_row,
+            first_col=first_col, last_row=last_row)
 
-    if first_row == 0 and first_col == 0 and last_row is None:
-        df = (spark.read
-              .option("header", str(has_header).lower())
-              .option("sep", delimiter).option("quote", quotechar)
-              # RFC 4180 doubled-quote escape ("" inside a quoted
-              # field); Spark's default escape is backslash, which
-              # leaves `""` as two literal quotes
-              .option("escape", quotechar)
-              .option("encoding", spark_charset)
-              .option("inferSchema", str(infer_schema).lower())
-              .option("mode", "PERMISSIVE")
-              .csv(path))
-        if custom_header is not None:
-            # Let Spark consume per-file headers (header=true above) and
-            # just rename — subtracting a collected "first row" is wrong
-            # for multi-file globs and can delete data rows that happen
-            # to equal the header.
-            names = _clean_header(list(custom_header), sanitize, dedupe)
-            return df.toDF(*names[:len(df.columns)])
-        if has_header:
-            # Spark's reader pre-mangles dupe/blank headers (col0/_c2);
-            # re-derive names from the raw header line (driver, 1 line)
-            with open(_first_file(path), encoding=encoding, newline="") as f:
-                raw = next(_csv.reader(f, delimiter=delimiter,
-                                       quotechar=quotechar), None)
-            if raw is None:  # empty file → empty frame, not StopIteration
-                return df
-            names = _clean_header(raw, sanitize, dedupe)
-            if len(names) == len(df.columns):
-                return df.toDF(*names)
-            return df.toDF(*_clean_header(df.columns, sanitize, dedupe))
-        # headerless: _c0.._cN → column_1..column_N+1 (ref io.py:846)
-        return df.toDF(*[f"column_{i + 1}" for i in range(len(df.columns))])
-
-    # sliced compatibility path: python csv over whole files, with
-    # mid-stream encoding recovery (ref meza/io.py:481-502)
-    import io as _io
-
-    rows = []
-    for p in _all_files(path):
-        with open(p, "rb") as f:
-            text = _decode_with_recovery(f.read(), encoding)
-        rdr = _csv.reader(_io.StringIO(text, newline=""),
-                          delimiter=delimiter, quotechar=quotechar)
-        lines = [r[first_col:] for r in rdr][first_row:]
-        if last_row is not None:
-            lines = lines[:last_row] if last_row >= 0 else lines[:last_row]
-        if custom_header is not None:
-            names = list(custom_header)
-            if has_header:
-                lines = lines[1:]
-        elif has_header:
-            names, lines = lines[0], lines[1:]
-        else:
-            names = [f"column_{i + 1}" for i in range(len(lines[0]))]
-        names = _clean_header(names, sanitize, dedupe)
-        # drop fully-empty rows (ref: io.py:589-595)
-        for line in lines:
-            if any(v.strip() for v in line):
-                rows.append(dict(zip(names, line)))
-    return _records_df(spark, rows, list(rows[0].keys()) if rows else names)
+    df = (spark.read
+          .option("header", str(has_header).lower())
+          .option("sep", delimiter).option("quote", quotechar)
+          # RFC 4180 doubled-quote escape ("" inside a quoted
+          # field); Spark's default escape is backslash, which
+          # leaves `""` as two literal quotes
+          .option("escape", quotechar)
+          .option("encoding", spark_charset)
+          .option("inferSchema", str(infer_schema).lower())
+          .option("mode", "PERMISSIVE")
+          .csv(path))
+    if custom_header is not None:
+        # Let Spark consume per-file headers (header=true above) and
+        # just rename — subtracting a collected "first row" is wrong
+        # for multi-file globs and can delete data rows that happen
+        # to equal the header.
+        names = _clean_header(list(custom_header), sanitize, dedupe)
+        return df.toDF(*names[:len(df.columns)])
+    if has_header:
+        # Spark's reader pre-mangles dupe/blank headers (col0/_c2);
+        # re-derive names from the raw header line (driver, 1 line)
+        with open(first, encoding=enc, newline="") as f:
+            raw = next(_csv.reader(f, delimiter=delimiter,
+                                   quotechar=quotechar), None)
+        if raw is None:  # empty file → empty frame, not StopIteration
+            return df
+        names = _clean_header(raw, sanitize, dedupe)
+        if len(names) == len(df.columns):
+            return df.toDF(*names)
+        return df.toDF(*_clean_header(df.columns, sanitize, dedupe))
+    # headerless: _c0.._cN → column_1..column_N+1 (ref io.py:846)
+    return df.toDF(*[f"column_{i + 1}" for i in range(len(df.columns))])
 
 
 def read_tsv(spark: SparkSession, path: str, **kwargs) -> DataFrame:
@@ -505,20 +477,22 @@ def read_geojson(spark: SparkSession, path: str,
 # driver/per-file parsed formats
 # ---------------------------------------------------------------------------
 
-def read_yaml(spark: SparkSession, path: str) -> DataFrame:
-    """YAML (ref: meza/io.py:1254-1287, blocking there too). Needs
-    PyYAML; import-gated."""
+def _yaml_records(path: str) -> list[dict]:
+    """One YAML file → records (a top-level mapping is one record)."""
     try:
         import yaml  # type: ignore
     except ImportError as e:  # pragma: no cover
         raise NotImplementedError("read_yaml requires PyYAML") from e
 
-    def parse(p):
-        with open(p, encoding="utf-8") as f:
-            data = yaml.safe_load(f)
-        return data if isinstance(data, list) else [data]
+    with open(path, encoding="utf-8") as f:
+        data = yaml.safe_load(f)
+    return data if isinstance(data, list) else [data]
 
-    return _per_file(spark, path, parse)
+
+def read_yaml(spark: SparkSession, path: str) -> DataFrame:
+    """YAML (ref: meza/io.py:1254-1287, blocking there too). Needs
+    PyYAML; import-gated."""
+    return _per_file(spark, path, _yaml_records)
 
 
 class _TableHTMLParser:
@@ -567,34 +541,75 @@ class _TableHTMLParser:
         return self.parser.tables
 
 
+def _html_records(path: str, table: int = 0, sanitize: bool = True,
+                  vertical: bool | None = None) -> list[dict]:
+    """One HTML file's ``table``-th table → records (see read_html)."""
+    with open(path, encoding=detect_encoding(path)) as f:
+        tables = _TableHTMLParser().extract(f.read())
+    if not tables:
+        return []
+    rows_th = tables[table]
+    rows = [r for r, _ in rows_th]
+    th_flags = [t for _, t in rows_th]
+    is_vertical = vertical
+    if is_vertical is None:
+        is_vertical = (len(rows) > 1 and all(
+            t and t[0] and not any(t[1:]) for t in th_flags if t))
+    if is_vertical:
+        names = _clean_header([r[0] for r in rows], sanitize)
+        cols = [r[1:] for r in rows]
+        n = min(len(c) for c in cols)
+        return [dict(zip(names, [col[i] for col in cols]))
+                for i in range(n)]
+    names = _clean_header(rows[0], sanitize)
+    return [dict(zip(names, r)) for r in rows[1:] if any(v for v in r)]
+
+
 def read_html(spark: SparkSession, path: str, table: int = 0,
               sanitize: bool = True, vertical: bool | None = None) -> DataFrame:
     """HTML table (ref: meza/io.py:1333-1431): ``table=`` index,
     th-header detection, vertical tables (first cell of each row is a
     th → transpose, ref io.py:1412-1415)."""
-    def parse(p):
-        enc = detect_encoding(p)
-        with open(p, encoding=enc) as f:
-            tables = _TableHTMLParser().extract(f.read())
-        if not tables:
-            return []
-        rows_th = tables[table]
-        rows = [r for r, _ in rows_th]
-        th_flags = [t for _, t in rows_th]
-        is_vertical = vertical
-        if is_vertical is None:
-            is_vertical = (len(rows) > 1 and all(
-                t and t[0] and not any(t[1:]) for t in th_flags if t))
-        if is_vertical:
-            names = _clean_header([r[0] for r in rows], sanitize)
-            cols = [r[1:] for r in rows]
-            n = min(len(c) for c in cols)
-            return [dict(zip(names, [col[i] for col in cols]))
-                    for i in range(n)]
-        names = _clean_header(rows[0], sanitize)
-        return [dict(zip(names, r)) for r in rows[1:] if any(v for v in r)]
+    return _per_file(spark, path, partial(
+        _html_records, table=table, sanitize=sanitize, vertical=vertical))
 
-    return _per_file(spark, path, parse)
+
+def _xls_records(path: str, sheet: int = 0, sanitize: bool = True,
+                 has_header: bool = True,
+                 date1904: bool | None = None) -> list[dict]:
+    """One workbook's ``sheet`` → records, empty cells as None (see
+    read_xls)."""
+    if path.endswith((".xlsx", ".xlsm")):
+        grid = _read_xlsx_grid(path, sheet, date1904)
+    else:
+        # native stdlib BIFF8 parse (OLE2 container + record walk in
+        # io/xls.py); xlrd is only a fallback for BIFF5-and-older
+        # files the native reader rejects
+        from .xls import read_biff_grid
+
+        try:
+            grid = read_biff_grid(path, sheet, date1904)
+        except ValueError:
+            try:
+                import xlrd  # type: ignore
+            except ImportError as e:
+                raise NotImplementedError(
+                    "pre-BIFF8 .xls needs xlrd; convert to .xlsx"
+                ) from e
+            book = xlrd.open_workbook(path)
+            sh = book.sheet_by_index(sheet)
+            grid = [[_xl_cell(sh.cell(r, c), book.datemode)
+                     for c in range(sh.ncols)] for r in range(sh.nrows)]
+    if not grid:
+        return []
+    if has_header:
+        names = _clean_header([str(v) for v in grid[0]], sanitize)
+        body = grid[1:]
+    else:
+        names = [f"column_{i+1}" for i in range(len(grid[0]))]
+        body = grid
+    return [dict(zip(names, [None if v == "" else v for v in r]))
+            for r in body if any(str(v).strip() for v in r)]
 
 
 def read_xls(spark: SparkSession, path: str, sheet: int = 0,
@@ -602,8 +617,8 @@ def read_xls(spark: SparkSession, path: str, sheet: int = 0,
              date1904: bool | None = None) -> DataFrame:
     """Excel (ref: meza/io.py:1033-1118). xlsx parsed with a minimal
     stdlib zip+XML reader (shared strings + 1904-date handling per the
-    reference's sanitize_sheet, io.py:963-1022); legacy .xls needs
-    xlrd (import-gated).
+    reference's sanitize_sheet, io.py:963-1022); legacy BIFF8 .xls
+    parsed natively by io/xls.py (older BIFF needs xlrd, import-gated).
 
     ``date1904`` overrides the workbook's declared date system — real
     Mac-made files sometimes carry 1904-based serials without the
@@ -611,40 +626,9 @@ def read_xls(spark: SparkSession, path: str, sheet: int = 0,
     published conversion data/converted/sheet_2.csv proves the 1904
     epoch). Default ``None`` trusts the file.
     """
-    def parse(p):
-        if p.endswith(".xlsx") or p.endswith(".xlsm"):
-            grid = _read_xlsx_grid(p, sheet, date1904)
-        else:
-            # native stdlib BIFF8 parse (r2 verdict #7) — OLE2 container
-            # + record walk in io/xls.py; xlrd is only a fallback for
-            # BIFF5-and-older files the native reader rejects
-            from .xls import read_biff_grid
-
-            try:
-                grid = read_biff_grid(p, sheet, date1904)
-            except ValueError:
-                try:
-                    import xlrd  # type: ignore
-                except ImportError as e:
-                    raise NotImplementedError(
-                        "pre-BIFF8 .xls needs xlrd; convert to .xlsx"
-                    ) from e
-                book = xlrd.open_workbook(p)
-                sh = book.sheet_by_index(sheet)
-                grid = [[_xl_cell(sh.cell(r, c), book.datemode)
-                         for c in range(sh.ncols)] for r in range(sh.nrows)]
-        if not grid:
-            return []
-        if has_header:
-            names = _clean_header([str(v) for v in grid[0]], sanitize)
-            body = grid[1:]
-        else:
-            names = [f"column_{i+1}" for i in range(len(grid[0]))]
-            body = grid
-        return [dict(zip(names, [None if v == "" else v for v in r]))
-                for r in body if any(str(v).strip() for v in r)]
-
-    return _per_file(spark, path, parse)
+    return _per_file(spark, path, partial(
+        _xls_records, sheet=sheet, sanitize=sanitize,
+        has_header=has_header, date1904=date1904))
 
 
 def _xl_cell(cell, datemode):  # pragma: no cover - xlrd path
@@ -1341,19 +1325,20 @@ def read_csv_distributed(spark: SparkSession, path: str,
                          sanitize: bool = False, dedupe: bool = True,
                          first_row: int = 0, first_col: int = 0,
                          last_row: int | None = None) -> DataFrame:
-    """EXECUTOR-parallel version of the messy-file CSV path: per-file
-    encoding detection + mid-stream recovery + row/col slicing, but
-    parsed on executors instead of the driver (ref semantics:
-    meza/io.py:456-502; the reference is single-threaded, this is
-    one task per file).
+    """The messy-file CSV parser, on executors: per-file encoding
+    detection (``encoding=None``) + mid-stream recovery + row/col
+    slicing (ref semantics: meza/io.py:456-502; the reference is
+    single-threaded, this is one task per file). ``read_csv`` routes
+    every file it cannot hand to ``spark.read.csv`` here.
 
     Each file rides Spark's ``binaryFile`` source as one row; a
     ``mapInPandas`` stage decodes it (BOM sniff → ladder → mid-stream
-    re-detection, same helpers as the driver path) and csv-parses it
-    locally. A directory of 10k mixed-encoding exports becomes a
-    10k-task scan — the right shape for non-splittable messy files.
-    For ONE huge clean file use ``read_csv`` (splittable scan);
-    ``binaryFile`` necessarily materializes a whole file per task.
+    re-detection), slices it, drops its header line and fully-empty
+    rows, and csv-parses it locally. A directory of 10k
+    mixed-encoding exports becomes a 10k-task scan — the right shape
+    for non-splittable messy files. For ONE huge clean file use
+    ``read_csv`` (splittable scan); ``binaryFile`` necessarily
+    materializes a whole file per task.
 
     Schema (all strings, meza's reader contract) comes from a bounded
     driver read of the first file's header region; ragged files pad

@@ -67,15 +67,10 @@ def records2csv(df: DataFrame, path: str, header: bool = True,
     # RFC 4180 quoting (doubled "" escapes, like the reference's python
     # csv.writer) unless the caller overrides `escape`
     options.setdefault("escape", '"')
-    w = df.write.mode("overwrite").option("header", str(header).lower())
-    for k, v in options.items():
-        w = w.option(k, v)
+    w = (df.coalesce(1) if single_file else df).write.mode("overwrite") \
+        .option("header", str(header).lower()).options(**options)
     if single_file:
         tmp = path + ".d"
-        w = df.coalesce(1).write.mode("overwrite") \
-            .option("header", str(header).lower())
-        for k, v in options.items():
-            w = w.option(k, v)
         w.csv(tmp)
         _collapse_part(tmp, path, ".csv")
     else:

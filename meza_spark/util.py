@@ -8,7 +8,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["spread", "barrier", "range_offsets", "plan_stats", "compact"]
+__all__ = ["spread", "barrier", "range_offsets", "plan_stats"]
 
 
 def spread(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -159,33 +159,3 @@ def plan_stats(df: DataFrame) -> dict:
         "window_execs": p.count("Window"),
     }
 
-
-def compact(spark, path: str, target_file_mb: int = 256,
-            fmt: str = "parquet") -> int:
-    """Small-files compaction: rewrite a table directory into
-    ~``target_file_mb`` files (the lakehouse OPTIMIZE pattern —
-    thousands of kilobyte part-files turn listings and scan task
-    scheduling into the bottleneck long before IO does).
-
-    Sizes come from the filesystem, the rewrite is one coalesce (no
-    shuffle; file boundaries only). Returns the new file count.
-    Writes to a sibling temp dir then swaps, so a crash never leaves
-    the table half-compacted.
-    """
-    import math
-    import os
-    import shutil
-
-    total = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path) for f in fs
-        if not f.startswith(("_", ".")))
-    n_files = max(1, math.ceil(total / (target_file_mb << 20)))
-    df = getattr(spark.read, fmt)(path)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    getattr(df.coalesce(n_files).write.mode("overwrite"), fmt)(tmp)
-    bak = path.rstrip("/") + "._compact_old"
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
-    return n_files

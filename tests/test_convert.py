@@ -3,6 +3,10 @@ corpus (meza/convert.py, meza/fntools.py — values re-derived from
 FIXTURES.md, not copied)."""
 
 import datetime
+import json
+import os
+import subprocess
+import sys
 
 import pyspark.sql.functions as F
 import pytest
@@ -141,3 +145,41 @@ def test_column_type_predicates(spark):
     assert rows["n/a"] == (False, True)
     assert rows[""] == (False, True)
     assert rows["x"] == (False, False)
+
+
+_RESTART = """
+import json, sys
+sys.path.insert(0, {root!r})
+from meza_spark import convert as cv
+from meza_spark.session import get_spark
+
+rows = [("1", "2/32/82"), ("2", "2001-03-04"), ("3", "na")]
+types = [{{"id": "n", "type": "int"}}, {{"id": "d", "type": "date"}}]
+
+
+def cast(app):
+    s = get_spark(app, master="local[1]", shuffle_partitions=1)
+    df = s.createDataFrame(rows, "n string, d string")
+    return s, sorted((r.n, str(r.d)) for r in cv.type_cast(df, types).collect())
+
+
+s1, first = cast("cast_a")
+s1.stop()
+s2, second = cast("cast_b")
+print(json.dumps({{"first": first, "second": second}}))
+s2.stop()
+"""
+
+
+def test_type_cast_memo_survives_session_restart():
+    # a subprocess, so the shared session fixture is never stopped; the
+    # fuzzy-date UDF must report to the live context's accumulator
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, "-c", _RESTART.format(root=root)],
+                         env=env, capture_output=True, text=True,
+                         timeout=600, check=True)
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert res["first"] == res["second"] == [
+        [1, "1982-02-28"], [2, "2001-03-04"], [3, "None"]]
+    assert "Failed to update accumulator" not in out.stderr

@@ -1,10 +1,10 @@
-"""Tests for meza_spark.llm.hll and util.plan_stats/compact."""
+"""Tests for meza_spark.llm.hll and util.plan_stats."""
 
 from pyspark.sql import functions as F
 
 from meza_spark.llm.hll import (distinct_sketches, hll_estimate,
                                 hll_merge)
-from meza_spark.util import compact, explain_str, plan_stats
+from meza_spark.util import explain_str, plan_stats
 
 
 def test_hll_estimate_accuracy(spark):
@@ -43,14 +43,3 @@ def test_plan_stats_counts(spark):
     assert s["python"] == 0
     assert s["exchanges"] >= 1
 
-
-def test_compact_reduces_files(spark, tmp_path):
-    import glob
-
-    path = str(tmp_path / "frag")
-    spark.range(10_000).repartition(24).write.parquet(path)
-    assert len(glob.glob(f"{path}/*.parquet")) == 24
-    n = compact(spark, path, target_file_mb=256)
-    assert n == 1
-    assert len(glob.glob(f"{path}/*.parquet")) == 1
-    assert spark.read.parquet(path).count() == 10_000

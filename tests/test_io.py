@@ -155,6 +155,19 @@ def test_csv_mid_read_encoding_recovery(spark, tmp_path):
         == {"fiancée 49"}
 
 
+def test_csv_directory_windows_1252(spark, tmp_path):
+    # a charset Spark cannot scan: each file parses on an executor
+    d = tmp_path / "cp1252"
+    d.mkdir()
+    (d / "a.csv").write_bytes("id,name\n1,café\n".encode("windows-1252"))
+    (d / "b.csv").write_bytes(
+        "id,name\n2,naïve – “q”\n\n3,€5\n".encode("windows-1252"))
+    df = mio.read_csv(spark, str(d))
+    assert df.columns == ["id", "name"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("1", "café"), ("2", "naïve – “q”"), ("3", "€5")]
+
+
 def test_decode_with_recovery_unit():
     from meza_spark.io.readers import _decode_with_recovery
 
@@ -676,22 +689,34 @@ def test_python_datasource_per_file_parallel(spark, tmp_path):
 
 def test_python_datasource_xlsx(spark, tmp_path):
     from meza_spark.io.datasource import register
-    from meza_spark.io.writers import records2csv  # noqa: F401  (env check)
 
-    # build a minimal xlsx with the engine's own test helper if present;
-    # otherwise reuse the grid writer from test_xlsx
-    import test_io as self_mod  # this module
-    make = getattr(self_mod, "_make_xlsx", None)
-    if make is None:
-        import pytest
-        pytest.skip("no xlsx fixture builder in this suite")
     p = tmp_path / "wb.xlsx"
-    make(p, [["City", "Pop"], ["Oslo", 700000], ["Bergen", 280000]])
+    _make_xlsx(p, [["City", "Pop"], ["Oslo", 700000], ["Bergen", ""]])
     register(spark)
     df = (spark.read.format("meza")
           .option("path", str(p)).option("fmt", "xlsx").load())
     assert df.columns == ["city", "pop"]
-    assert df.count() == 2
+    # empty cells come back null, as read_xls returns them
+    assert sorted(map(tuple, df.collect())) == [("Bergen", None),
+                                               ("Oslo", "700000")]
+
+
+def test_python_datasource_xls_biff_matches_read_xls(spark, tmp_path):
+    from meza_spark.io.datasource import register
+    from meza_spark.io.xls import write_biff
+
+    p = str(tmp_path / "wb.xls")
+    write_biff([["Name", "Qty", "Note"], ["bolt", 3, None],
+                ["nut", 2.5, "loose"]], p)
+    register(spark)
+    df = (spark.read.format("meza")
+          .option("path", p).option("fmt", "xls").load())
+    assert df.columns == ["name", "qty", "note"]
+    assert sorted(map(tuple, df.collect())) == [
+        ("bolt", "3", None), ("nut", "2.5", "loose")]
+    # the blank cell is null in both readers
+    assert [r.note for r in mio.read_xls(spark, p).orderBy("name")
+            .collect()] == [None, "loose"]
 
 
 def test_read_orc_roundtrip(spark, tmp_path):
