@@ -7,7 +7,12 @@ is a **Column expression builder** — the hot path stays JVM-side
 (regexp_replace / try_cast / to_timestamp inside WholeStageCodegen);
 only the fuzzy-date fallback drops to an Arrow-batched pandas UDF, and
 then only over the rows native parsing failed (tiered cast — see
-SURVEY §7 hard-part 1).
+SURVEY §7 hard-part 1). Dates are cast in tiers: a regex shape
+dispatch gives meza's common spellings one native parse each (ISO,
+``M/d/yyyy`` with the impossible-day repair, ``M/d/yy``, ``yyyyMMdd``,
+``Sep. 21, 2007``, ``September 21, 2007``, ``21-Sep-2007``), a format
+ladder takes the other native formats, and dateutil only what both
+missed.
 
 Reference semantics implemented:
   to_bool     meza/convert.py:101-157  (truthy words, fntools.py:47-48)
@@ -161,11 +166,26 @@ def _fuzzy_ts_fn(s: pd.Series) -> pd.Series:
 def to_datetime(c: Column, fuzzy: bool = False) -> Column:
     """Tiered timestamp cast (ref: meza/convert.py:374-436).
 
-    Tier 1: ``coalesce(try_to_timestamp(fmt) for fmt in ladder)`` —
-    all JVM-side, codegen'd. Tier 2 (``fuzzy=True``): rows every format
-    missed go through the dateutil pandas UDF. At 100 TB keep
-    ``fuzzy=False`` unless the column is known-messy: the UDF runs only
-    on tier-1 misses but still forces those rows through Python.
+    Tier 0: a regex picks the row's shape and makes one native parse:
+
+    - ISO ``yyyy-MM-dd`` with an optional time;
+    - ``M/d/yyyy``; a day of 29-99 its month lacks becomes the month's
+      last day, as meza's repair walk (31 → 28) does, for years 100+;
+    - ``M/d/yy``, with dateutil's two-digit-year window; ``yyyyMMdd``;
+    - ``MMM d, yyyy`` with an optional period (``Sep. 21, 2007``),
+      ``MMMM d, yyyy`` and ``d-MMM-yyyy``, for years 1000+ (month
+      names in any case).
+
+    Tier 1: ``coalesce(try_to_timestamp(fmt) for fmt in ladder)`` for
+    rows tier 0 missed — all JVM-side, codegen'd. Tier 2
+    (``fuzzy=True``): rows every format missed go through the dateutil
+    pandas UDF, which also takes every shape outside tier 0 (``Sept.``,
+    ``21-September-2007``, repairs of two-digit years). Where tier 0
+    parses a row it returns dateutil's value, except for a four-digit
+    year below 100 in ``M/d/yyyy`` (dateutil: '4/1/0004' → 2004).
+    At 100 TB keep ``fuzzy=False`` unless the column is known-messy:
+    the UDF runs only on native misses but still forces those rows
+    through Python.
     """
     s = nullify(c)
 
@@ -175,6 +195,17 @@ def to_datetime(c: Column, fuzzy: bool = False) -> Column:
         return F.when(F.year(e) > F.year(F.current_date()) + 49,
                       F.add_months(e, -1200)).otherwise(e)
 
+    # meza's impossible-day repair for M/d/yyyy, JVM-side: walking the
+    # day down from 31 to 28 until dateutil accepts it lands on the
+    # month's last day whenever the day is 29-99. dateutil reads a
+    # four-digit year below 100 as a two-digit one ('0004' → 2004), so
+    # those years, here and in the named-month shapes, stay its job.
+    mdy = F.split(s, "/")
+    mon, day, yr = (mdy.getItem(i).try_cast("int") for i in range(3))
+    month_end = F.when(mon.between(1, 12) & day.between(29, 99) & (yr >= 100),
+                       F.last_day(F.make_date(yr, mon, F.lit(1)))
+                       .cast("timestamp"))
+
     # Tier 0: regexp shape dispatch for the common formats — exactly one
     # parse attempt per row instead of walking the whole format ladder
     # (this path dominates at scale; the ladder is the long tail).
@@ -182,11 +213,18 @@ def to_datetime(c: Column, fuzzy: bool = False) -> Column:
         F.when(s.rlike(r"^\d{4}-\d{2}-\d{2}([T ]\d{1,2}:\d{2}(:\d{2})?(\.\d+)?)?$"),
                F.try_to_timestamp(s))          # ISO date/timestamp, native
         .when(s.rlike(r"^\d{1,2}/\d{1,2}/\d{4}$"),
-              F.try_to_timestamp(s, F.lit("M/d/yyyy")))
+              F.coalesce(F.try_to_timestamp(s, F.lit("M/d/yyyy")), month_end))
         .when(s.rlike(r"^\d{1,2}/\d{1,2}/\d{2}$"),
               repivot(F.try_to_timestamp(s, F.lit("M/d/yy"))))
         .when(s.rlike(r"^\d{8}$"),
               F.try_to_timestamp(s, F.lit("yyyyMMdd")))
+        .when(s.rlike(r"^[A-Za-z]{3}\.? \d{1,2}, [1-9]\d{3}$"),
+              F.try_to_timestamp(F.regexp_replace(s, r"\.", ""),
+                                 F.lit("MMM d, yyyy")))
+        .when(s.rlike(r"^[A-Za-z]{4,9} \d{1,2}, [1-9]\d{3}$"),
+              F.try_to_timestamp(s, F.lit("MMMM d, yyyy")))
+        .when(s.rlike(r"^\d{1,2}-[A-Za-z]{3}-[1-9]\d{3}$"),
+              F.try_to_timestamp(s, F.lit("d-MMM-yyyy")))
     )
     tiers = [fast]
     for fmt in _DT_FORMATS:

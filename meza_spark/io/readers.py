@@ -230,7 +230,12 @@ def read_csv(spark: SparkSession, path: str, has_header: bool = True,
 
     Clean files (no row/col slicing, a charset Spark scans, a tail that
     decodes like the head): pure ``spark.read.csv`` — distributed,
-    splittable, scalable; header hygiene is a driver-side rename.
+    splittable, scalable; header hygiene is a driver-side rename of the
+    raw header line. When that header's names are all non-blank and
+    distinct (case-insensitively), they are handed to Spark as an
+    all-string schema, so the read launches no job; blank or duplicate
+    names, ``custom_header``, headerless files and ``infer_schema=True``
+    let Spark infer the columns (one job).
 
     Messy files take ``read_csv_distributed`` (one executor task per
     file, all columns strings): ``first_row``/``first_col``/``last_row``
@@ -259,17 +264,35 @@ def read_csv(spark: SparkSession, path: str, has_header: bool = True,
             sanitize=sanitize, dedupe=dedupe, first_row=first_row,
             first_col=first_col, last_row=last_row)
 
-    df = (spark.read
-          .option("header", str(has_header).lower())
-          .option("sep", delimiter).option("quote", quotechar)
-          # RFC 4180 doubled-quote escape ("" inside a quoted
-          # field); Spark's default escape is backslash, which
-          # leaves `""` as two literal quotes
-          .option("escape", quotechar)
-          .option("encoding", spark_charset)
-          .option("inferSchema", str(infer_schema).lower())
-          .option("mode", "PERMISSIVE")
-          .csv(path))
+    reader = (spark.read
+              .option("header", str(has_header).lower())
+              .option("sep", delimiter).option("quote", quotechar)
+              # RFC 4180 doubled-quote escape ("" inside a quoted
+              # field); Spark's default escape is backslash, which
+              # leaves `""` as two literal quotes
+              .option("escape", quotechar)
+              .option("encoding", spark_charset)
+              .option("inferSchema", str(infer_schema).lower())
+              .option("mode", "PERMISSIVE"))
+    raw = None
+    if has_header and custom_header is None:
+        # Spark's reader pre-mangles dupe/blank headers (col0/_c2);
+        # re-derive names from the raw header line (driver, 1 line)
+        with open(first, encoding=enc, newline="") as f:
+            raw = next(_csv.reader(f, delimiter=delimiter,
+                                   quotechar=quotechar), None)
+    if (raw and not infer_schema and all(n.strip() for n in raw)
+            and len({n.casefold() for n in raw}) == len(raw)):
+        # The header as an all-string schema spares Spark the job that
+        # reads the first line to name the columns. Names go in
+        # verbatim, so Spark's header check matches; a blank or
+        # duplicate name would fail the check or the schema.
+        from pyspark.sql.types import StringType, StructField, StructType
+
+        schema = StructType([StructField(n, StringType()) for n in raw])
+        return reader.schema(schema).csv(path).toDF(
+            *_clean_header(raw, sanitize, dedupe))
+    df = reader.csv(path)
     if custom_header is not None:
         # Let Spark consume per-file headers (header=true above) and
         # just rename — subtracting a collected "first row" is wrong
@@ -278,11 +301,6 @@ def read_csv(spark: SparkSession, path: str, has_header: bool = True,
         names = _clean_header(list(custom_header), sanitize, dedupe)
         return df.toDF(*names[:len(df.columns)])
     if has_header:
-        # Spark's reader pre-mangles dupe/blank headers (col0/_c2);
-        # re-derive names from the raw header line (driver, 1 line)
-        with open(first, encoding=enc, newline="") as f:
-            raw = next(_csv.reader(f, delimiter=delimiter,
-                                   quotechar=quotechar), None)
         if raw is None:  # empty file → empty frame, not StopIteration
             return df
         names = _clean_header(raw, sanitize, dedupe)

@@ -75,6 +75,54 @@ def test_impossible_day_repair(spark):
     assert got == datetime.date(1982, 2, 28)
 
 
+def _native_date_grid():
+    """Spellings the native date tiers serve, plus near misses ('Sept',
+    day 0, day 32+) that must fall through to dateutil."""
+    names = [datetime.date(2001, m, 1).strftime(f)
+             for m in range(1, 13) for f in ("%b", "%B")] + ["Sept", "Sept."]
+    days = ["0", "1", "01", "9", "28", "29", "30", "31", "32"]
+    # '0004' is left out: dateutil reads it as 2004, the native M/d/yyyy
+    # and ladder formats as year 4
+    years = ["0100", "0400", "1900", "2000", "2004", "2021", "9999"]
+    grid = []
+    for name in names:
+        for case in (str.title, str.upper, str.lower):
+            for dot in ("", ".") if not name.endswith(".") else ("",):
+                grid += [f"{case(name)}{dot} {d}, {y}"
+                         for d in days for y in years]
+            if len(name) == 3:
+                grid += [f"{d}-{case(name)}-{y}" for d in days for y in years]
+    grid += [f"{m}/{d}/{y}" for m in range(0, 14) for d in range(1, 100)
+             for y in years]
+    return sorted(set(grid))
+
+
+def test_native_date_tiers_agree_with_dateutil(spark):
+    import pandas as pd
+
+    grid = _native_date_grid()
+    df = spark.createDataFrame([(v,) for v in grid], "v string")
+    native = {r.v: r.t for r in df.select(
+        "v", F.date_format(cv.to_datetime(F.col("v")),
+                           "yyyy-MM-dd HH:mm:ss").alias("t")).collect()}
+    ref = cv._fuzzy_ts_fn(pd.Series(grid))
+    parsed = {v: want for v, want in zip(grid, ref) if native[v] is not None}
+    bad = [(v, native[v], want) for v, want in parsed.items()
+           if pd.isna(want) or native[v] != want.isoformat(sep=" ")]
+    assert not bad, bad[:10]
+    # most of the grid never needs dateutil
+    assert len(parsed) > len(grid) // 2
+
+
+@pytest.mark.parametrize("raw,expected", [
+    ("Sep. 21, 2007", datetime.date(2007, 9, 21)),
+    ("21-Sep-2007", datetime.date(2007, 9, 21)),
+    ("2/30/2021", datetime.date(2021, 2, 28)),
+])
+def test_common_spellings_parse_without_dateutil(spark, raw, expected):
+    assert _one(spark, raw, lambda c: cv.to_date(c, fuzzy=False)) == expected
+
+
 def test_unparseable_date_is_null(spark):
     assert _one(spark, "not a date", lambda c: cv.to_date(c, fuzzy=True)) is None
 
