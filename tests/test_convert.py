@@ -117,6 +117,7 @@ def test_native_date_tiers_agree_with_dateutil(spark):
 @pytest.mark.parametrize("raw,expected", [
     ("Sep. 21, 2007", datetime.date(2007, 9, 21)),
     ("21-Sep-2007", datetime.date(2007, 9, 21)),
+    ("1-Sep-2007", datetime.date(2007, 9, 1)),
     ("2/30/2021", datetime.date(2021, 2, 28)),
 ])
 def test_common_spellings_parse_without_dateutil(spark, raw, expected):
