@@ -103,27 +103,17 @@ def test_csv_header_hygiene(spark, tmp_path):
     assert df.columns == ["some_col", "some_col_2", "column_3"]
 
 
-def _jobs(spark, fn):
-    """``(fn(), number of Spark jobs fn launched)``."""
-    sc = spark.sparkContext
-    bus, tracker = sc._jsc.sc().listenerBus(), sc.statusTracker()
-    bus.waitUntilEmpty(60_000)
-    before = set(tracker.getJobIdsForGroup())
-    out = fn()
-    bus.waitUntilEmpty(60_000)
-    return out, len(set(tracker.getJobIdsForGroup()) - before)
-
-
 @pytest.mark.parametrize("header,names,jobs", [
     ("id,Name,when", ["id", "Name", "when"], 0),
     ("id,name,name", ["id", "name", "name_2"], 1),
     ("id,Name,name", ["id", "Name", "name"], 1),
     ("id,,when", ["id", "column_2", "when"], 1),
 ])
-def test_csv_header_names_and_jobs(spark, tmp_path, header, names, jobs):
+def test_csv_header_names_and_jobs(spark, count_jobs, tmp_path, header, names,
+                                   jobs):
     # a header Spark can take as a schema needs no inference job
     p = _write(tmp_path, "h.csv", f"{header}\n1,a,x\n2,b,y\n")
-    df, n = _jobs(spark, lambda: mio.read_csv(spark, p))
+    df, n = count_jobs(lambda: mio.read_csv(spark, p))
     assert (df.columns, n) == (names, jobs)
     assert sorted(tuple(r) for r in df.collect()) == [
         ("1", "a", "x"), ("2", "b", "y")]

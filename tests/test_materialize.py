@@ -84,35 +84,24 @@ def test_dataset_cache_only_in_barrier():
     assert any(line in inside for line in _cache_calls(util))
 
 
-def _jobs(spark, fn):
-    """``(fn(), number of Spark jobs fn launched)``."""
-    sc = spark.sparkContext
-    bus, tracker = sc._jsc.sc().listenerBus(), sc.statusTracker()
-    bus.waitUntilEmpty(60_000)
-    before = set(tracker.getJobIdsForGroup())
-    out = fn()
-    bus.waitUntilEmpty(60_000)
-    return out, len(set(tracker.getJobIdsForGroup()) - before)
-
-
-def test_spread_after_a_shuffle_launches_no_job(spark):
+def test_spread_after_a_shuffle_launches_no_job(spark, count_jobs):
     # asking a shuffled frame for its partition count runs the shuffle
     agg = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
-    out, jobs = _jobs(spark, lambda: spread(agg))
+    out, jobs = count_jobs(lambda: spread(agg))
     assert (out is agg, jobs) == (True, 0)
 
 
-def test_spread_widens_a_one_partition_scan(spark):
+def test_spread_widens_a_one_partition_scan(spark, count_jobs):
     one = spark.range(0, 10, 1, numPartitions=1)
-    out, jobs = _jobs(spark, lambda: spread(one))
+    out, jobs = count_jobs(lambda: spread(one))
     assert (jobs, plan_stats(out)["exchanges"]) == (0, 1)
     assert "RoundRobinPartitioning" in explain_str(out, "simple")
 
 
-def test_small_pair_graph_is_one_job(spark):
+def test_small_pair_graph_is_one_job(spark, count_jobs):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)], "id_a long, id_b long")
-    comp, jobs = _jobs(spark, lambda: connected_components(pairs))
+    comp, jobs = count_jobs(lambda: connected_components(pairs))
     assert jobs == 1
     assert sorted(map(tuple, comp.collect())) == [
         (1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10), (20, 20),
