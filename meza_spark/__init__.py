@@ -45,8 +45,23 @@ del _os, _v
 
 ENCODING = "utf-8"
 
+# --- meza's value grammar (ref: meza/fntools.py:426-586) -------------------
+# One definition for both engines: typetools.guess_type_by_value compiles
+# these strings with Python ``re``; the Column predicates
+# (functions.is_*_col) and casts (convert) run them in the JVM.
+
 # Currency symbols stripped by the numeric casts (ref: meza/__init__.py:31)
 CURRENCIES = ("$", "£", "€")
+# Currency symbols and the thousands separator, removed anywhere in a
+# value before the number patterns apply (ref: meza/fntools.py:426-451)
+CURRENCY_RE = "[" + "".join(CURRENCIES) + ",]"
+# Trimmed off both ends of a value: the ASCII set both engines spell \s
+TRIM_CHARS = " \t\n\r\x0b\x0c"
+# Whole-value number patterns, ASCII digits only, with meza's
+# leading-zero rule: '02139', '00' and '0e5' are text; '0', '-0' and
+# '0.5' are numbers (ref: meza/fntools.py:490-494).
+INT_RE = r"[+-]?(0|[1-9][0-9]*)"
+FLOAT_RE = r"[+-]?([0-9]*\.[0-9]+|([0-9]+\.[0-9]*|[1-9][0-9]*)[eE][+-]?[0-9]+)"
 
 # Null-word list recognized by the casts (ref: meza/fntools.py:572)
 NULL_WORDS = ("na", "n/a", "none", "null", ".")

@@ -7,12 +7,13 @@ is a **Column expression builder** — the hot path stays JVM-side
 (regexp_replace / try_cast / to_timestamp inside WholeStageCodegen);
 only the fuzzy-date fallback drops to an Arrow-batched pandas UDF, and
 then only over the rows native parsing failed (tiered cast — see
-SURVEY §7 hard-part 1). Dates are cast in tiers: a regex shape
+SURVEY §7 hard-part 1). Dates are cast in two tiers: a regex shape
 dispatch gives meza's common spellings one native parse each (ISO,
-``M/d/yyyy`` with the impossible-day repair, ``M/d/yy``, ``yyyyMMdd``,
-``Sep. 21, 2007``, ``September 21, 2007``, ``21-Sep-2007``), a format
-ladder takes the other native formats, and dateutil only what both
-missed.
+``M/d/yyyy`` with the impossible-day repair, ``M/d/yyyy H:mm:ss``,
+``M/d/yy``, ``yyyy/M/d``, ``yyyyMMdd``, ``Sep. 21, 2007``,
+``September 21, 2007``, ``21-Sep-2007``, ``21-Sep-07``), and dateutil
+takes only what the shapes missed. The trim rule, currency class and
+null words come from the package's one value grammar.
 
 Reference semantics implemented:
   to_bool     meza/convert.py:101-157  (truthy words, fntools.py:47-48)
@@ -32,35 +33,38 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from . import BOOL_FALSE, BOOL_TRUE, NULL_WORDS
+from . import BOOL_FALSE, BOOL_TRUE, CURRENCY_RE, NULL_WORDS, TRIM_CHARS
 
 __all__ = [
     "to_bool", "to_int", "to_float", "to_decimal", "to_date", "to_time",
     "to_datetime", "type_cast", "strip_currency", "nullify",
 ]
 
-# regex fragment matching currency symbols + thousands separators
-_CURRENCY_RE = r"[\$£€,\s]"
 _NULL_WORDS_ARR = list(NULL_WORDS) + [""]
+
+
+def _trim(c: Column) -> Column:
+    """The value as a string with the grammar's ``TRIM_CHARS`` off both
+    ends."""
+    return F.trim(c.cast("string"), F.lit(TRIM_CHARS))
 
 
 def nullify(c: Column) -> Column:
     """Map meza's null-word list ('na','n/a','none','null','.') and empty
-    string to real NULL (ref: meza/fntools.py:572 ``is_null``)."""
-    s = F.trim(c.cast("string"))
+    string to real NULL (ref: meza/fntools.py:572 ``is_null``); other
+    values come back trimmed."""
+    s = _trim(c)
     return F.when(F.lower(s).isin(_NULL_WORDS_ARR), F.lit(None)).otherwise(s)
 
 
 def strip_currency(c: Column) -> Column:
-    """Strip currency symbols and thousand separators from a numeric
-    string (ref: meza/fntools.py:426-451 ``strip``). Parenthesized
-    accounting negatives '(123)' become '-123'."""
-    s = F.trim(c.cast("string"))
-    s = F.regexp_replace(s, _CURRENCY_RE, "")
-    s = F.when(s.rlike(r"^\(.*\)$"),
-               F.concat(F.lit("-"), F.regexp_replace(s, r"[()]", ""))
-               ).otherwise(s)
-    return s
+    """Strip currency symbols, thousand separators and whitespace from a
+    numeric string (ref: meza/fntools.py:426-451 ``strip``).
+    Parenthesized accounting negatives '(123)' become '-123'."""
+    s = F.regexp_replace(c.cast("string"), CURRENCY_RE + r"|\s", "")
+    return F.when(s.rlike(r"^\(.*\)$"),
+                  F.concat(F.lit("-"), F.regexp_replace(s, r"[()]", ""))
+                  ).otherwise(s)
 
 
 def to_bool(c: Column) -> Column:
@@ -83,32 +87,26 @@ def to_bool(c: Column) -> Column:
 def to_int(c: Column, strict: bool = False) -> Column:
     """Currency-aware int cast (ref: meza/convert.py:160-211).
 
-    Strips $£€ and thousands separators, truncates decimals toward zero
-    (meza: ``int(float(x))``). Permissive mode maps failures to 0
-    (meza's default); ``strict=True`` yields null instead (the
-    engine-native analogue of ``warn=True``).
+    Strips currency symbols, thousands separators and whitespace,
+    truncates decimals toward zero (meza: ``int(float(x))``). Permissive
+    mode maps failures to 0 (meza's default); ``strict=True`` yields
+    null instead (the engine-native analogue of ``warn=True``).
     """
-    s = strip_currency(nullify(c))
-    d = s.try_cast("double")
+    n = nullify(c)
     # int(float) in Python truncates toward zero; Spark double→bigint cast
     # also truncates toward zero. try_cast: ±Infinity/overflow → null
-    # instead of an ANSI CAST_OVERFLOW runtime error.
-    i = d.try_cast("bigint")
-    if strict:
-        return F.when(nullify(c).isNull(), F.lit(None).cast("bigint")).otherwise(i)
-    return F.when(nullify(c).isNull(), F.lit(None).cast("bigint")) \
-            .otherwise(F.coalesce(i, F.lit(0)))
+    # instead of an ANSI CAST_OVERFLOW runtime error. A null word stays
+    # null in both modes.
+    i = strip_currency(n).try_cast("double").try_cast("bigint")
+    return i if strict else F.when(n.isNotNull(), F.coalesce(i, F.lit(0)))
 
 
 def to_float(c: Column, strict: bool = False) -> Column:
     """Currency-aware float cast (ref: meza/convert.py:214-252);
     failures → 0.0 permissive / null strict."""
-    s = strip_currency(nullify(c))
-    d = s.try_cast("double")
-    if strict:
-        return F.when(nullify(c).isNull(), F.lit(None).cast("double")).otherwise(d)
-    return F.when(nullify(c).isNull(), F.lit(None).cast("double")) \
-            .otherwise(F.coalesce(d, F.lit(0.0)))
+    n = nullify(c)
+    d = strip_currency(n).try_cast("double")
+    return d if strict else F.when(n.isNotNull(), F.coalesce(d, F.lit(0.0)))
 
 
 def to_decimal(c: Column, places: int = 2, precision: int = 38) -> Column:
@@ -122,14 +120,11 @@ def to_decimal(c: Column, places: int = 2, precision: int = 38) -> Column:
 
 # --- dates -----------------------------------------------------------------
 
-# Native-first format ladder tried before the fuzzy UDF fallback.
-_DT_FORMATS = [
-    "yyyy-MM-dd'T'HH:mm:ss.SSSSSS", "yyyy-MM-dd'T'HH:mm:ss",
-    "yyyy-MM-dd HH:mm:ss.SSS", "yyyy-MM-dd HH:mm:ss", "yyyy-MM-dd HH:mm",
-    "yyyy-MM-dd", "yyyy/MM/dd", "MM/dd/yyyy HH:mm:ss", "MM/dd/yyyy",
-    "MM/dd/yy", "dd-MMM-yy", "dd-MMM-yyyy", "MMMM d, yyyy", "MMM d, yyyy",
-    "yyyyMMdd",
-]
+# A four-digit year of 0100 or later. dateutil reads '0004' in some
+# spellings as a two-digit year ('Apr 1, 0004' → 2004) and in others
+# literally ('4/1/0004' → year 4), so years below 0100 are its job in
+# every shape.
+_Y4 = r"(0[1-9]|[1-9]\d)\d\d"
 
 
 def _fuzzy_ts_fn(s: pd.Series) -> pd.Series:
@@ -164,28 +159,28 @@ def _fuzzy_ts_fn(s: pd.Series) -> pd.Series:
 
 
 def to_datetime(c: Column, fuzzy: bool = False) -> Column:
-    """Tiered timestamp cast (ref: meza/convert.py:374-436).
+    """Two-tier timestamp cast (ref: meza/convert.py:374-436).
 
-    Tier 0: a regex picks the row's shape and makes one native parse:
+    Tier 0: a regex picks the row's shape and makes one native parse,
+    JVM-side and codegen'd:
 
     - ISO ``yyyy-MM-dd`` with an optional time;
     - ``M/d/yyyy``; a day of 29-99 its month lacks becomes the month's
-      last day, as meza's repair walk (31 → 28) does, for years 100+;
-    - ``M/d/yy``, with dateutil's two-digit-year window; ``yyyyMMdd``;
+      last day, as meza's repair walk (31 → 28) does;
+      ``M/d/yyyy H:mm:ss``;
+    - ``M/d/yy``, with dateutil's two-digit-year window; ``yyyy/M/d``;
+      ``yyyyMMdd``;
     - ``MMM d, yyyy`` with an optional period (``Sep. 21, 2007``),
-      ``MMMM d, yyyy`` and ``d-MMM-yyyy``, for years 1000+ (month
-      names in any case).
+      ``MMMM d, yyyy``, ``d-MMM-yyyy`` and ``d-MMM-yy`` (month names
+      in any case).
 
-    Tier 1: ``coalesce(try_to_timestamp(fmt) for fmt in ladder)`` for
-    rows tier 0 missed — all JVM-side, codegen'd. Tier 2
-    (``fuzzy=True``): rows every format missed go through the dateutil
-    pandas UDF, which also takes every shape outside tier 0 (``Sept.``,
-    ``21-September-2007``, repairs of two-digit years). Where tier 0
-    parses a row it returns dateutil's value, except for a four-digit
-    year below 100 in ``M/d/yyyy`` (dateutil: '4/1/0004' → 2004).
-    At 100 TB keep ``fuzzy=False`` unless the column is known-messy:
-    the UDF runs only on native misses but still forces those rows
-    through Python.
+    A four-digit year must be 0100 or later. Tier 1 (``fuzzy=True``):
+    rows no shape parsed go through the dateutil pandas UDF, which
+    takes every other spelling (``Sept.``, ``21-September-2007``, years
+    below 0100, repairs of two-digit years). Where tier 0 parses a row
+    it returns dateutil's value. At 100 TB keep ``fuzzy=False`` unless
+    the column is known-messy: the UDF runs only on native misses but
+    still forces those rows through Python.
     """
     s = nullify(c)
 
@@ -197,49 +192,42 @@ def to_datetime(c: Column, fuzzy: bool = False) -> Column:
 
     # meza's impossible-day repair for M/d/yyyy, JVM-side: walking the
     # day down from 31 to 28 until dateutil accepts it lands on the
-    # month's last day whenever the day is 29-99. dateutil reads a
-    # four-digit year below 100 as a two-digit one ('0004' → 2004), so
-    # those years, here and in the named-month shapes, stay its job.
+    # month's last day whenever the day is 29-99.
     mdy = F.split(s, "/")
     mon, day, yr = (mdy.getItem(i).try_cast("int") for i in range(3))
-    month_end = F.when(mon.between(1, 12) & day.between(29, 99) & (yr >= 100),
+    month_end = F.when(mon.between(1, 12) & day.between(29, 99),
                        F.last_day(F.make_date(yr, mon, F.lit(1)))
                        .cast("timestamp"))
 
-    # Tier 0: regexp shape dispatch for the common formats — exactly one
-    # parse attempt per row instead of walking the whole format ladder
-    # (this path dominates at scale; the ladder is the long tail).
-    fast = (
-        F.when(s.rlike(r"^\d{4}-\d{2}-\d{2}([T ]\d{1,2}:\d{2}(:\d{2})?(\.\d+)?)?$"),
-               F.try_to_timestamp(s))          # ISO date/timestamp, native
-        .when(s.rlike(r"^\d{1,2}/\d{1,2}/\d{4}$"),
-              F.coalesce(F.try_to_timestamp(s, F.lit("M/d/yyyy")), month_end))
-        .when(s.rlike(r"^\d{1,2}/\d{1,2}/\d{2}$"),
-              repivot(F.try_to_timestamp(s, F.lit("M/d/yy"))))
-        .when(s.rlike(r"^\d{8}$"),
-              F.try_to_timestamp(s, F.lit("yyyyMMdd")))
-        .when(s.rlike(r"^[A-Za-z]{3}\.? \d{1,2}, [1-9]\d{3}$"),
+    def parse(fmt):
+        return F.try_to_timestamp(s, F.lit(fmt))
+
+    # exactly one parse attempt per row, picked by the row's shape
+    native = (
+        F.when(s.rlike("^" + _Y4 + r"-\d{2}-\d{2}([T ]\d{1,2}:\d{2}(:\d{2})?(\.\d+)?)?$"),
+               F.try_to_timestamp(s))
+        .when(s.rlike(r"^\d{1,2}/\d{1,2}/" + _Y4 + "$"),
+              F.coalesce(parse("M/d/yyyy"), month_end))
+        .when(s.rlike(r"^\d{1,2}/\d{1,2}/" + _Y4 + r" \d{1,2}:\d{2}:\d{2}$"),
+              parse("M/d/yyyy H:mm:ss"))
+        .when(s.rlike(r"^\d{1,2}/\d{1,2}/\d{2}$"), repivot(parse("M/d/yy")))
+        .when(s.rlike("^" + _Y4 + r"/\d{1,2}/\d{1,2}$"), parse("yyyy/M/d"))
+        .when(s.rlike("^" + _Y4 + r"\d{4}$"), parse("yyyyMMdd"))
+        .when(s.rlike(r"^[A-Za-z]{3}\.? \d{1,2}, " + _Y4 + "$"),
               F.try_to_timestamp(F.regexp_replace(s, r"\.", ""),
                                  F.lit("MMM d, yyyy")))
-        .when(s.rlike(r"^[A-Za-z]{4,9} \d{1,2}, [1-9]\d{3}$"),
-              F.try_to_timestamp(s, F.lit("MMMM d, yyyy")))
-        .when(s.rlike(r"^\d{1,2}-[A-Za-z]{3}-[1-9]\d{3}$"),
-              F.try_to_timestamp(s, F.lit("d-MMM-yyyy")))
+        .when(s.rlike(r"^[A-Za-z]{4,9} \d{1,2}, " + _Y4 + "$"),
+              parse("MMMM d, yyyy"))
+        .when(s.rlike(r"^\d{1,2}-[A-Za-z]{3}-" + _Y4 + "$"), parse("d-MMM-yyyy"))
+        .when(s.rlike(r"^\d{1,2}-[A-Za-z]{3}-\d{2}$"), repivot(parse("d-MMM-yy")))
     )
-    tiers = [fast]
-    for fmt in _DT_FORMATS:
-        e = F.try_to_timestamp(s, F.lit(fmt))
-        if fmt.endswith("yy") and not fmt.endswith("yyyy"):
-            e = repivot(e)
-        tiers.append(e)
-    native = F.coalesce(*tiers)
     if not fuzzy:
         return native
     # Catalyst extracts Python UDFs into an eval node that runs for
     # EVERY row regardless of coalesce laziness — so mask the UDF's
-    # input to null where the native tiers already parsed: the Arrow
-    # transfer still happens, but dateutil (the expensive part) only
-    # runs on actual tier-1 misses.
+    # input to null where tier 0 already parsed: the Arrow transfer
+    # still happens, but dateutil (the expensive part) only runs on
+    # actual tier-0 misses.
     fuzzy_ts = pandas_udf(_fuzzy_ts_fn, "timestamp")
     return F.coalesce(native, fuzzy_ts(F.when(native.isNull(), s)))
 

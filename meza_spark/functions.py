@@ -16,6 +16,9 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import BOOL_FALSE, BOOL_TRUE, CURRENCY_RE, FLOAT_RE, INT_RE
+from .convert import _trim, nullify
+
 __all__ = [
     "underscorify", "dedupe_names", "find_names", "mreplace", "rreplace",
     "add_ordinal", "xmlize", "strip_separators", "get_separators",
@@ -123,51 +126,37 @@ def strip_separators(c: Column, thousands: str = ",",
 # ---------------------------------------------------------------------------
 # Column-level type predicates (ref: meza/fntools.py:454-586)
 # ---------------------------------------------------------------------------
-# JVM regex expressions, codegen-friendly — the same semantics the
-# sampling inference applies driver-side (typetools.guess_type_by_value):
-# currency-aware, thousands separators allowed, leading-zero strings
-# like '02139' are NOT numeric (ref: meza/fntools.py:490-494, the
-# currency-zero regression corpus at tests/test_fntools.py:35-75).
-
-_INT_SQL = r"^([+-]?\d{1,3}(,\d{3})*|[+-]?\d+)$"
-_FLOAT_SQL = r"^([+-]?(\d{1,3}(,\d{3})*|\d*)\.\d+|[+-]?\d+\.?\d*[eE][+-]?\d+)$"
+# Built from the package's value grammar (meza_spark/__init__.py), which
+# typetools.guess_type_by_value also compiles, so both classify every
+# string alike: currency symbols and thousands separators allowed
+# anywhere, leading-zero strings like '02139' NOT numeric (ref:
+# meza/fntools.py:490-494). A SQL null gives null, except in is_null_col.
 
 
-def _bare_number(c: Column) -> Column:
-    """Trimmed string with one leading currency symbol removed."""
-    return F.regexp_replace(F.trim(c.cast("string")), "^[\\$£€]", "")
-
-
-def _leading_zero_col(s: Column) -> Column:
-    t = F.regexp_replace(s, r"^[+-]", "")
-    return (F.length(t) > 1) & t.startswith("0") & (~t.contains("."))
+def _bare_number_is(c: Column, pattern: str) -> Column:
+    """True where the trimmed value, currency class removed, is wholly
+    ``pattern``."""
+    bare = F.regexp_replace(_trim(c), CURRENCY_RE, "")
+    return bare.rlike(rf"^(?:{pattern})\z")
 
 
 def is_int_col(c: Column) -> Column:
     """True where the value parses as an int under meza semantics."""
-    b = _bare_number(c)
-    return b.rlike(_INT_SQL) & ~_leading_zero_col(b)
+    return _bare_number_is(c, INT_RE)
 
 
 def is_numeric_col(c: Column) -> Column:
     """True where the value is int- or float-parseable (currency and
     thousands separators allowed; '02139' excluded)."""
-    b = _bare_number(c)
-    return (b.rlike(_INT_SQL) | b.rlike(_FLOAT_SQL)) & ~_leading_zero_col(b)
+    return _bare_number_is(c, f"{INT_RE}|{FLOAT_RE}")
 
 
 def is_bool_col(c: Column) -> Column:
     """True for meza's truthy/falsey words (yes/y/true/t/no/n/false/f)."""
-    from . import BOOL_FALSE, BOOL_TRUE
-
-    return F.lower(F.trim(c.cast("string"))).isin(
-        list(BOOL_TRUE) + list(BOOL_FALSE))
+    return F.lower(_trim(c)).isin(list(BOOL_TRUE + BOOL_FALSE))
 
 
 def is_null_col(c: Column) -> Column:
     """True for SQL null, empty string, and meza's null words
     (na/n/a/none/null/.)."""
-    from . import NULL_WORDS
-
-    s = F.lower(F.trim(c.cast("string")))
-    return c.isNull() | (s == "") | s.isin(list(NULL_WORDS))
+    return nullify(c).isNull()

@@ -24,16 +24,19 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
-from . import BOOL_FALSE, BOOL_TRUE, NULL_WORDS
+from . import (BOOL_FALSE, BOOL_TRUE, CURRENCY_RE, FLOAT_RE, INT_RE,
+               NULL_WORDS, TRIM_CHARS)
 
 __all__ = ["detect_types", "guess_type_by_field", "guess_type_by_value"]
 
-_INT_RE = re.compile(r"^[+-]?\d{1,3}(,\d{3})*$|^[+-]?\d+$")
-_FLOAT_RE = re.compile(r"^[+-]?(\d{1,3}(,\d{3})*|\d*)\.\d+$|^[+-]?\d+\.?\d*[eE][+-]?\d+$")
-# currency symbols + thousand separators strip ANYWHERE, matching the
-# reference's fntools.strip (meza/fntools.py:426-451) — '41800000.01,'
-# (a separator-mangled fixed-width field) must still read as numeric
-_CURRENCY_RE = re.compile(r"[\$£€,]")
+# meza's value grammar (meza_spark/__init__.py), the same strings the
+# Column predicates in functions.py run in the JVM. The currency class
+# strips anywhere, as the reference's fntools.strip does
+# (meza/fntools.py:426-451): '41800000.01,' (a separator-mangled
+# fixed-width field) still reads as numeric.
+_CURRENCY = re.compile(CURRENCY_RE)
+_INT = re.compile(INT_RE).fullmatch
+_FLOAT = re.compile(FLOAT_RE).fullmatch
 _TIME_RE = re.compile(r"^\d{1,2}:\d{2}(:\d{2})?(\s*[aApP][mM])?$")
 _DATE_RE = re.compile(
     r"^(\d{4}[-/]\d{1,2}[-/]\d{1,2}|\d{1,2}[-/]\d{1,2}[-/]\d{2,4}|"
@@ -86,16 +89,16 @@ def guess_type_by_value(value: Any) -> str:
         return "time"
     if isinstance(value, dt.date):
         return "date"
-    s = str(value).strip()
+    s = str(value).strip(TRIM_CHARS)
     low = s.lower()
     if not s or low in NULL_WORDS:
         return "null"
     if low in BOOL_TRUE or low in BOOL_FALSE:
         return "bool"
-    bare = _CURRENCY_RE.sub("", s)
-    if _INT_RE.match(bare) and not _leading_zero(bare):
+    bare = _CURRENCY.sub("", s)
+    if _INT(bare):
         return "int"
-    if _FLOAT_RE.match(bare) and not _leading_zero(bare):
+    if _FLOAT(bare):
         return "float"
     if _DATETIME_RE.match(s):
         return "datetime"
@@ -104,12 +107,6 @@ def guess_type_by_value(value: Any) -> str:
     if _DATE_RE.match(s):
         return "date"
     return "text"
-
-
-def _leading_zero(s: str) -> bool:
-    """'02139' stays text (ref: meza/fntools.py:490-494)."""
-    t = s.lstrip("+-")
-    return len(t) > 1 and t[0] == "0" and "." not in t
 
 
 # compatible-type widening (ref: meza/process.py:237-241 gen_types)

@@ -76,14 +76,15 @@ def test_impossible_day_repair(spark):
 
 
 def _native_date_grid():
-    """Spellings the native date tiers serve, plus near misses ('Sept',
-    day 0, day 32+) that must fall through to dateutil."""
+    """Spellings the native date shapes serve, plus near misses ('Sept',
+    day 0, day 32+, hour 24, years below 0100) that must fall through to
+    dateutil."""
     names = [datetime.date(2001, m, 1).strftime(f)
              for m in range(1, 13) for f in ("%b", "%B")] + ["Sept", "Sept."]
     days = ["0", "1", "01", "9", "28", "29", "30", "31", "32"]
-    # '0004' is left out: dateutil reads it as 2004, the native M/d/yyyy
-    # and ladder formats as year 4
-    years = ["0100", "0400", "1900", "2000", "2004", "2021", "9999"]
+    years = ["0004", "0099", "0100", "0400", "1900", "2000", "2004", "2021",
+             "9999"]
+    yy = ["00", "15", "49", "50", "75", "76", "82", "99"]
     grid = []
     for name in names:
         for case in (str.title, str.upper, str.lower):
@@ -91,9 +92,15 @@ def _native_date_grid():
                 grid += [f"{case(name)}{dot} {d}, {y}"
                          for d in days for y in years]
             if len(name) == 3:
-                grid += [f"{d}-{case(name)}-{y}" for d in days for y in years]
+                grid += [f"{d}-{case(name)}-{y}"
+                         for d in days for y in years + yy]
     grid += [f"{m}/{d}/{y}" for m in range(0, 14) for d in range(1, 100)
              for y in years]
+    grid += [f"{m}/{d}/{y} {t}" for m in ("0", "2", "02", "12", "13")
+             for d in days for y in years
+             for t in ("0:00:00", "9:05:07", "23:59:59", "24:00:00")]
+    grid += [f"{y}/{m}/{d}" for y in years
+             for m in ("0", "1", "02", "12", "13") for d in days]
     return sorted(set(grid))
 
 
@@ -119,9 +126,19 @@ def test_native_date_tiers_agree_with_dateutil(spark):
     ("21-Sep-2007", datetime.date(2007, 9, 21)),
     ("1-Sep-2007", datetime.date(2007, 9, 1)),
     ("2/30/2021", datetime.date(2021, 2, 28)),
+    ("21-Sep-07", datetime.date(2007, 9, 21)),
+    ("9/21/2007 4:14:00", datetime.date(2007, 9, 21)),
+    ("2007/9/21", datetime.date(2007, 9, 21)),
 ])
 def test_common_spellings_parse_without_dateutil(spark, raw, expected):
     assert _one(spark, raw, lambda c: cv.to_date(c, fuzzy=False)) == expected
+
+
+def test_year_below_0100_is_left_to_dateutil(spark):
+    # dateutil reads this spelling's '0004' as a two-digit year
+    fuzzy = _one(spark, "Apr 1, 0004", lambda c: cv.to_date(c, fuzzy=True))
+    assert fuzzy == datetime.date(2004, 4, 1)
+    assert _one(spark, "4/1/0004", cv.to_date) is None
 
 
 def test_unparseable_date_is_null(spark):
