@@ -14,7 +14,7 @@ directory, tar size fields) and actual output during streaming reads;
 encrypted zip members, absolute / ``..``-traversal member paths, and
 member-count bombs are skippable ``ValueError``\\ s, never crashes.
 
-Spark layer: ``expand_archive`` is a row-local Arrow ``mapInPandas``
+Spark layer: ``expand_archive`` is row-local (``util.extract_rows``)
 — zero shuffle; each archive explodes WITHIN its executor, so 100 TB
 of archives scales with executor count, not driver memory. Hostile
 payloads become ``error`` rows.
@@ -170,43 +170,16 @@ def encode_gz(name: str, data: bytes) -> bytes:
 
 def expand_archive(df, payload_col: str = "payload",
                    id_col: str = "media_id"):
-    """Explode every archive payload of a binary column into member
-    rows — row-local Arrow ``mapInPandas``, zero shuffle; hostile
-    payloads become single ``error`` rows, never failed stages."""
-    from typing import Iterator
+    """One row per member of each archive payload: kind, index, name,
+    size and bytes; rows and ``error`` rows as in
+    :func:`meza_spark.util.extract_rows`."""
+    from meza_spark.util import extract_rows
 
-    import pandas as pd
-    from pyspark.sql.types import (BinaryType, IntegerType, LongType,
-                                   StringType, StructField, StructType)
+    def fn(b):
+        r = expand_archive_bytes(b)
+        return [(r["kind"], i, name, len(data), data)
+                for i, (name, data) in enumerate(r["members"])]
 
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("kind", StringType()),
-        StructField("member_idx", IntegerType()),
-        StructField("member_name", StringType()),
-        StructField("member_size", LongType()),
-        StructField("member_bytes", BinaryType()),
-        StructField("error", StringType()),
-    ])
-    names = [f.name for f in out_schema]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for mid, payload in zip(pdf_b[id_col], pdf_b[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    r = expand_archive_bytes(bytes(payload))
-                    for idx, (name, data) in enumerate(r["members"]):
-                        rows.append((mid, r["kind"], idx, name,
-                                     len(data), data, None))
-                except ValueError as e:
-                    rows.append((mid, None, None, None, None, None,
-                                 str(e)[:200]))
-            yield pd.DataFrame(rows, columns=names)
-
-    from meza_spark.util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return extract_rows(df, fn, "kind string, member_idx int, "
+                        "member_name string, member_size bigint, "
+                        "member_bytes binary", payload_col, id_col)

@@ -17,8 +17,9 @@ yields its child sitemap locs with ``kind='index'``. Gzip payloads
 (the standard ``sitemap.xml.gz``) inflate under a budget first.
 
 Scale shape: robots corpora are per-registered-host (small —
-broadcast them); both operators are row-local Arrow ``mapInPandas``
-over the PAYLOAD side, so the URL corpus itself never shuffles.
+broadcast them); both operators are row-local (a pandas UDF and
+``util.extract_rows``) over the PAYLOAD side, so the URL corpus
+itself never shuffles.
 """
 
 from __future__ import annotations
@@ -229,44 +230,16 @@ def encode_sitemap(entries, index: bool = False,
 
 def sitemap_urls(df, payload_col: str = "payload",
                  id_col: str = "media_id"):
-    """Explode sitemap payloads into one row per entry — row-local
-    Arrow ``mapInPandas``, zero shuffle; hostile payloads become
-    single ``error`` rows."""
-    from typing import Iterator
+    """One row per entry of each sitemap payload: kind, index, loc,
+    lastmod, changefreq and priority; rows and ``error`` rows as in
+    :func:`meza_spark.util.extract_rows`."""
+    from meza_spark.util import extract_rows
 
-    import pandas as pd
-    from pyspark.sql.types import (IntegerType, LongType, StringType,
-                                   StructField, StructType)
+    def fn(b):
+        r = parse_sitemap_bytes(b)
+        return [(r["kind"], i, *entry)
+                for i, entry in enumerate(r["entries"])]
 
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("kind", StringType()),
-        StructField("url_idx", IntegerType()),
-        StructField("loc", StringType()),
-        StructField("lastmod", StringType()),
-        StructField("changefreq", StringType()),
-        StructField("priority", StringType()),
-        StructField("error", StringType()),
-    ])
-    names = [f.name for f in out_schema]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for mid, payload in zip(pdf_b[id_col], pdf_b[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    r = parse_sitemap_bytes(bytes(payload))
-                    for i, (loc, lm, cf, pr) in enumerate(r["entries"]):
-                        rows.append((mid, r["kind"], i, loc, lm, cf,
-                                     pr, None))
-                except ValueError as e:
-                    rows.append((mid, None, None, None, None, None,
-                                 None, str(e)[:200]))
-            yield pd.DataFrame(rows, columns=names)
-
-    from meza_spark.util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return extract_rows(df, fn, "kind string, url_idx int, loc string, "
+                        "lastmod string, changefreq string, "
+                        "priority string", payload_col, id_col)

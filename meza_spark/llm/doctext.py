@@ -32,7 +32,7 @@ UTF-8 text     passed through verbatim (format 'txt')
 
 Anything else — image/audio containers, undecodable bytes — yields an
 ``error`` row (route media through decode_image/decode_audio
-instead). Row-local ``mapInPandas``, zero shuffle: the whole content
+instead). Row-local (``util.extract_rows``), zero shuffle: the whole content
 tier keeps the scale shape where 100 TB is executor-count-bound.
 """
 
@@ -187,48 +187,17 @@ def extract_document_bytes(b: bytes, _depth: int = 0) -> dict:
 
 def document_text(df, payload_col: str = "payload",
                   id_col: str = "media_id"):
-    """The one-stop content operator: sniff-dispatch every payload
-    of a mixed binary column to its extraction tier. Arrow-batched
-    ``mapInPandas``, row-local, zero shuffle; hostile payloads become
-    ``error`` rows, never failed stages."""
-    from typing import Iterator
+    """The one-stop content operator: format, part count, title and
+    text of each payload of a mixed binary column, sniff-dispatched by
+    :func:`extract_document_bytes`; rows and ``error`` rows as in
+    :func:`meza_spark.util.extract_rows`."""
+    from meza_spark.util import extract_rows
 
-    import pandas as pd
-    from pyspark.sql.types import (IntegerType, LongType, StringType,
-                                   StructField, StructType)
+    def fn(b):
+        r = extract_document_bytes(b)
+        return [(r["format"], r["n_parts"], r["title"], r["text"],
+                 len(r["text"]))]
 
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("format", StringType()),
-        StructField("n_parts", IntegerType()),
-        StructField("title", StringType()),
-        StructField("text", StringType()),
-        StructField("n_chars", IntegerType()),
-        StructField("error", StringType()),
-    ])
-    names = [f.name for f in out_schema]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for mid, payload in zip(pdf_b[id_col], pdf_b[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    r = extract_document_bytes(bytes(payload))
-                    rows.append((mid, r["format"], r["n_parts"],
-                                 r["title"], r["text"],
-                                 len(r["text"]), None))
-                except ValueError as e:
-                    rows.append((mid, None, None, None, None, None,
-                                 str(e)[:200]))
-                except Exception as e:   # noqa: BLE001 — last line of
-                    # defense; typed escapes are fuzz-pinned bugs
-                    rows.append((mid, None, None, None, None, None,
-                                 f"{type(e).__name__}: {e}"[:200]))
-            yield pd.DataFrame(rows, columns=names)
-
-    from meza_spark.util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return extract_rows(df, fn, "format string, n_parts int, "
+                        "title string, text string, n_chars int",
+                        payload_col, id_col)

@@ -23,9 +23,10 @@ budgets).
 lines and reverses ``>From `` quoting; each message then goes through
 the same extractor.
 
-Spark layer: ``eml_text`` is a row-local Arrow ``mapInPandas`` over a
-binary column — zero shuffle, the content-tier scale shape. Hostile
-payloads raise ``ValueError`` (callers surface error rows).
+Spark layer: ``eml_text`` runs the extractor row-locally over a
+binary column (``util.extract_rows``) — zero shuffle, the content-tier
+scale shape. Hostile payloads raise ``ValueError`` (callers surface
+error rows).
 """
 
 from __future__ import annotations
@@ -127,9 +128,11 @@ def extract_eml_bytes(b: bytes) -> dict:
         msg = email.message_from_bytes(b, policy=email.policy.default)
     except Exception as e:
         raise ValueError(f"unparseable message: {e}") from None
-    if not (msg.get("From") or msg.get("Subject") or msg.get("To")
-            or msg.get("Message-ID") or msg.get("Date")
-            or msg.get("MIME-Version")):
+    # presence only: msg.get() parses address headers, and the stdlib
+    # parser raises IndexError on fragments such as "From: a@"
+    if not any(name in msg for name in ("From", "Subject", "To",
+                                        "Message-ID", "Date",
+                                        "MIME-Version")):
         raise ValueError("no RFC 5322 headers — not an email")
     out: list = []
     atts: list = []
@@ -249,44 +252,16 @@ def encode_mbox(messages) -> bytes:
 # ----------------------------------------------------------- spark layer
 
 def eml_text(df, payload_col: str = "payload", id_col: str = "media_id"):
-    """Extract every .eml payload of a binary column — row-local
-    Arrow ``mapInPandas``, zero shuffle; hostile payloads become
-    ``error`` rows, never failed stages."""
-    from typing import Iterator
+    """Subject, sender, part and attachment counts and body text of
+    each .eml payload; rows and ``error`` rows as in
+    :func:`meza_spark.util.extract_rows`."""
+    from meza_spark.util import extract_rows
 
-    import pandas as pd
-    from pyspark.sql.types import (IntegerType, LongType, StringType,
-                                   StructField, StructType)
+    def fn(b):
+        r = extract_eml_bytes(b)
+        return [(r["subject"], r["sender"], r["n_parts"],
+                 r["n_attachments"], r["text"], len(r["text"]))]
 
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("subject", StringType()),
-        StructField("sender", StringType()),
-        StructField("n_parts", IntegerType()),
-        StructField("n_attachments", IntegerType()),
-        StructField("text", StringType()),
-        StructField("n_chars", IntegerType()),
-        StructField("error", StringType()),
-    ])
-    names = [f.name for f in out_schema]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for mid, payload in zip(pdf_b[id_col], pdf_b[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    r = extract_eml_bytes(bytes(payload))
-                    rows.append((mid, r["subject"], r["sender"],
-                                 r["n_parts"], r["n_attachments"],
-                                 r["text"], len(r["text"]), None))
-                except ValueError as e:
-                    rows.append((mid, None, None, None, None, None,
-                                 None, str(e)[:200]))
-            yield pd.DataFrame(rows, columns=names)
-
-    from meza_spark.util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return extract_rows(df, fn, "subject string, sender string, "
+                        "n_parts int, n_attachments int, text string, "
+                        "n_chars int", payload_col, id_col)

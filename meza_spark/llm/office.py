@@ -24,7 +24,7 @@ same discipline as the PDF/tile-grid inflate caps) so a zip bomb
 ValueErrors instead of allocating. Encrypted/exotic members stay
 honest gates.
 
-Spark-side: :func:`office_text` — Arrow-batched ``mapInPandas``,
+Spark-side: :func:`office_text` — ``util.extract_rows``,
 row-local, zero shuffle (the PDF tier's scale shape: at 100 TB it
 scales with executor count; one hostile file yields an ``error``
 row, never a failed stage).
@@ -538,50 +538,16 @@ def _zip_parts(parts: dict, stored_first: str | None = None) -> bytes:
 
 def office_text(df, payload_col: str = "payload",
                 id_col: str = "media_id"):
-    """Distributed zip-document text extraction via Arrow-batched
-    ``mapInPandas`` — row-local, zero shuffle (the pdf_text scale
-    shape). Hostile/encrypted/spreadsheet payloads surface as
-    ``error`` rows instead of failing the stage."""
-    from typing import Iterator
+    """Format, part count, title and text of each zip-document payload
+    (docx, pptx, odt, epub); rows and ``error`` rows as in
+    :func:`meza_spark.util.extract_rows`."""
+    from meza_spark.util import extract_rows
 
-    import pandas as pd
-    from pyspark.sql.types import (IntegerType, LongType, StringType,
-                                   StructField, StructType)
+    def fn(b):
+        r = extract_office_bytes(b)
+        return [(r["format"], r["n_parts"], r["title"], r["text"],
+                 len(r["text"]))]
 
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("format", StringType()),
-        StructField("n_parts", IntegerType()),
-        StructField("title", StringType()),
-        StructField("text", StringType()),
-        StructField("n_chars", IntegerType()),
-        StructField("error", StringType()),
-    ])
-    names = [f.name for f in out_schema]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for mid, payload in zip(pdf_b[id_col], pdf_b[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    r = extract_office_bytes(bytes(payload))
-                    rows.append((mid, r["format"], r["n_parts"],
-                                 r["title"], r["text"],
-                                 len(r["text"]), None))
-                except ValueError as e:
-                    rows.append((mid, None, None, None, None, None,
-                                 str(e)[:200]))
-                except Exception as e:   # noqa: BLE001 — one hostile
-                    # file must never fail a 100 TB stage (typed
-                    # escapes are bugs, fuzz-pinned; this is the last
-                    # line of defense)
-                    rows.append((mid, None, None, None, None, None,
-                                 f"{type(e).__name__}: {e}"[:200]))
-            yield pd.DataFrame(rows, columns=names)
-
-    from meza_spark.util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return extract_rows(df, fn, "format string, n_parts int, "
+                        "title string, text string, n_chars int",
+                        payload_col, id_col)

@@ -1941,58 +1941,19 @@ def encode_pdf(pages, *, stream_filter: str = "none",
 
 def pdf_text(df, payload_col: str = "payload",
              id_col: str = "media_id", max_pages: int | None = None):
-    """Distributed PDF text extraction via Arrow-batched
-    ``mapInPandas`` — row-local (one document never crosses a
-    partition boundary), zero shuffle, so at 100 TB it scales with
-    executor count exactly like the image/audio decode tier.
-    Undecodable documents (encrypted, exotic filters, hostile bytes)
-    surface as ``error`` rows instead of failing the stage."""
-    from typing import Iterator
+    """PDF version, page count, title, producer and text (at most
+    ``max_pages`` pages) of each payload; rows and ``error`` rows as
+    in :func:`meza_spark.util.extract_rows`."""
+    from meza_spark.util import extract_rows
 
-    import pandas as pd
-    from pyspark.sql.types import (IntegerType, LongType, StringType,
-                                   StructField, StructType)
+    def fn(b):
+        r = extract_pdf_bytes(b, max_pages=max_pages)
+        return [(r["version"], r["n_pages"], r["title"], r["producer"],
+                 r["text"], len(r["text"]))]
 
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("version", StringType()),
-        StructField("n_pages", IntegerType()),
-        StructField("title", StringType()),
-        StructField("producer", StringType()),
-        StructField("text", StringType()),
-        StructField("n_chars", IntegerType()),
-        StructField("error", StringType()),
-    ])
-    names = [f.name for f in out_schema]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for mid, payload in zip(pdf_b[id_col], pdf_b[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    r = extract_pdf_bytes(bytes(payload),
-                                          max_pages=max_pages)
-                    rows.append((mid, r["version"], r["n_pages"],
-                                 r["title"], r["producer"], r["text"],
-                                 len(r["text"]), None))
-                except ValueError as e:
-                    rows.append((mid, None, None, None, None, None,
-                                 None, str(e)[:200]))
-                except Exception as e:   # noqa: BLE001 — one hostile
-                    # document must NEVER fail a 100 TB stage; typed
-                    # escapes are bugs (fuzz-pinned), but the error
-                    # row is the last line of defense either way
-                    rows.append((mid, None, None, None, None, None,
-                                 None,
-                                 f"{type(e).__name__}: {e}"[:200]))
-            yield pd.DataFrame(rows, columns=names)
-
-    from meza_spark.util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return extract_rows(df, fn, "version string, n_pages int, "
+                        "title string, producer string, text string, "
+                        "n_chars int", payload_col, id_col)
 
 
 # ------------------------------------------------- standard encryption

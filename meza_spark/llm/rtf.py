@@ -227,48 +227,16 @@ def extract_rtf_bytes(b: bytes) -> dict:
 
 def rtf_text(df, payload_col: str = "payload",
              id_col: str = "media_id"):
-    """Distributed RTF text extraction via Arrow-batched
-    ``mapInPandas`` — row-local, zero shuffle (the pdf_text scale
-    shape); hostile payloads become ``error`` rows."""
-    from typing import Iterator
+    """Group count, title and text of each RTF payload; rows and
+    ``error`` rows as in :func:`meza_spark.util.extract_rows`."""
+    from meza_spark.util import extract_rows
 
-    import pandas as pd
-    from pyspark.sql.types import (IntegerType, LongType, StringType,
-                                   StructField, StructType)
+    def fn(b):
+        r = extract_rtf_bytes(b)
+        return [(r["n_groups"], r["title"], r["text"], len(r["text"]))]
 
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("n_groups", IntegerType()),
-        StructField("title", StringType()),
-        StructField("text", StringType()),
-        StructField("n_chars", IntegerType()),
-        StructField("error", StringType()),
-    ])
-    names = [f.name for f in out_schema]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for mid, payload in zip(pdf_b[id_col], pdf_b[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    r = extract_rtf_bytes(bytes(payload))
-                    rows.append((mid, r["n_groups"], r["title"],
-                                 r["text"], len(r["text"]), None))
-                except ValueError as e:
-                    rows.append((mid, None, None, None, None,
-                                 str(e)[:200]))
-                except Exception as e:   # noqa: BLE001 — last line of
-                    # defense: one hostile file never fails the stage
-                    rows.append((mid, None, None, None, None,
-                                 f"{type(e).__name__}: {e}"[:200]))
-            yield pd.DataFrame(rows, columns=names)
-
-    from meza_spark.util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return extract_rows(df, fn, "n_groups int, title string, "
+                        "text string, n_chars int", payload_col, id_col)
 
 
 # --------------------------------------------------------- fixture side

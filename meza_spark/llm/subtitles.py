@@ -14,7 +14,7 @@ timestamp line are dropped; both comma (SRT) and dot (VTT)
 millisecond separators parse, hours optional in VTT.
 
 Spark layer: ``subtitle_cues`` explodes payloads into one row per
-cue (row-local Arrow ``mapInPandas``, zero shuffle).
+cue (row-local ``util.extract_rows``, zero shuffle).
 """
 
 from __future__ import annotations
@@ -154,49 +154,19 @@ def _fmt_ms(ms: int, sep: str) -> str:
 
 def subtitle_cues(df, payload_col: str = "payload",
                   id_col: str = "media_id"):
-    """Explode subtitle payloads into one row per cue — row-local
-    Arrow ``mapInPandas``, zero shuffle; hostile payloads become
-    single ``error`` rows."""
-    from typing import Iterator
+    """One row per cue of each SRT or WebVTT payload: format, cue
+    index, start and end in ms, and text; rows and ``error`` rows as
+    in :func:`meza_spark.util.extract_rows`."""
+    from meza_spark.util import extract_rows
 
-    import pandas as pd
-    from pyspark.sql.types import (IntegerType, LongType, StringType,
-                                   StructField, StructType)
+    def fn(b):
+        text = b.decode("utf-8", "replace")
+        if text.lstrip("\ufeff").startswith("WEBVTT"):
+            return [("vtt", *cue) for cue in parse_vtt(text)]
+        if _SRT_SHAPE_RE.match(b):
+            return [("srt", *cue) for cue in parse_srt(text)]
+        raise ValueError("not a subtitle payload")
 
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("format", StringType()),
-        StructField("cue_idx", IntegerType()),
-        StructField("start_ms", LongType()),
-        StructField("end_ms", LongType()),
-        StructField("cue_text", StringType()),
-        StructField("error", StringType()),
-    ])
-    names = [f.name for f in out_schema]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for mid, payload in zip(pdf_b[id_col], pdf_b[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    b = bytes(payload)
-                    text = b.decode("utf-8", "replace")
-                    if text.lstrip("﻿").startswith("WEBVTT"):
-                        cues, fmt = parse_vtt(text), "vtt"
-                    elif _SRT_SHAPE_RE.match(b):
-                        cues, fmt = parse_srt(text), "srt"
-                    else:
-                        raise ValueError("not a subtitle payload")
-                    for idx, s, e, t in cues:
-                        rows.append((mid, fmt, idx, s, e, t, None))
-                except ValueError as e:
-                    rows.append((mid, None, None, None, None, None,
-                                 str(e)[:200]))
-            yield pd.DataFrame(rows, columns=names)
-
-    from meza_spark.util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return extract_rows(df, fn, "format string, cue_idx int, "
+                        "start_ms bigint, end_ms bigint, cue_text string",
+                        payload_col, id_col)

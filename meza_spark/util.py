@@ -2,13 +2,16 @@
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterable, Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (DataType, LongType, StringType, StructField,
+                               StructType)
 
-__all__ = ["spread", "barrier", "range_offsets", "plan_stats"]
+__all__ = ["spread", "barrier", "range_offsets", "extract_rows",
+           "plan_stats"]
 
 
 def spread(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -118,6 +121,64 @@ def range_offsets(df: DataFrame, keys: str | Sequence[str],
         total += sums.get(pid) or 0
     off = F.array(*map(F.lit, offsets)).cast("array<bigint>")[F.col("_pid")]
     return tagged.withColumn("_off", off), total
+
+
+def extract_rows(df: DataFrame, fn: Callable[[bytes], Iterable[tuple]],
+                 fields: str, payload_col: str = "payload",
+                 id_col: str = "media_id") -> DataFrame:
+    """Row-local payload extraction, the one boundary every
+    ``extract_*_bytes`` operator shares: bad payloads become ``error``
+    rows, never failed stages.
+
+    ``fn(b)`` takes one payload as ``bytes`` and returns the output
+    rows for it, each a tuple of ``fields`` values (a DDL list such as
+    ``"text string, n_chars int"``). The result has the columns
+    ``[id_col long, *fields, error string]``: one row per tuple ``fn``
+    returns, keyed by the payload's ``id_col``, or, when ``fn`` raises,
+    exactly one row with every field null. Its ``error`` is ``str(e)``
+    for a ``ValueError`` (the extractors' contract for bad input) and
+    ``"TypeName: message"`` for any other exception, both cut to 200
+    characters. ``fn``'s rows are collected inside the ``try``, so a
+    payload that fails midway leaves no partial rows. Null payloads
+    are dropped. The plan is ``spread`` plus one Arrow
+    ``mapInPandas``: one payload never crosses a partition boundary.
+
+    Not for the media decoders (``decode_image``, ``decode_audio``,
+    ``decode_video``, ``resize_image``, ``image_features``,
+    ``frame_sample``): they have no ``error`` column, and their
+    ``unsupported=`` policy raises, skips or stubs, so folding them in
+    would make this helper branch on its caller. Not for the
+    binaryFile readers in ``meza_spark.io`` (warc, webdataset, avro,
+    arrow_ipc) either: they fail the whole file by contract.
+    """
+    out_schema = StructType([StructField(id_col, LongType()),
+                             *DataType.fromDDL(fields).fields,
+                             StructField("error", StringType())])
+    names = out_schema.names
+    nulls = (None,) * (len(names) - 2)
+
+    def run(batches):
+        import pandas as pd
+
+        for batch in batches:
+            rows = []
+            for key, payload in zip(batch[id_col], batch[payload_col]):
+                if payload is None:
+                    continue
+                try:
+                    rows += [(key, *r, None) for r in fn(bytes(payload))]
+                except ValueError as e:
+                    rows.append((key, *nulls, str(e)[:200]))
+                except Exception as e:  # noqa: BLE001 — one hostile
+                    # payload must never fail a stage; an escape other
+                    # than ValueError is a decoder bug (the fuzz tests
+                    # pin them), and this row is the last line of defence
+                    rows.append((key, *nulls,
+                                 f"{type(e).__name__}: {e}"[:200]))
+            yield pd.DataFrame(rows, columns=names)
+
+    return spread(df.select(id_col, payload_col)).mapInPandas(
+        run, schema=out_schema)
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:

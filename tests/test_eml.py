@@ -76,6 +76,40 @@ def test_empty_and_budget():
         extract_eml_bytes(big)
 
 
+FUZZ_MSG = encode_eml(["fuzz body"], subject="Fuzz",
+                      attachments=[("a.bin", b"\x00\x01\x02")])
+
+# address-header fragments the stdlib parser meets with IndexError
+HOSTILE_HEADERS = [b"From: a@", b"To: <", b'From: "']
+
+
+def _succeeds_or_value_error(payload):
+    try:
+        extract_eml_bytes(payload)
+    except ValueError:
+        pass
+
+
+@pytest.mark.parametrize("payload", HOSTILE_HEADERS)
+def test_hostile_address_headers_never_crash(payload):
+    _succeeds_or_value_error(payload)
+
+
+def test_truncation_fuzz_never_crashes():
+    for cut in range(len(FUZZ_MSG)):
+        _succeeds_or_value_error(FUZZ_MSG[:cut])
+
+
+def test_mutation_fuzz_never_crashes():
+    # every byte flipped, and every byte turned into a line break
+    # (which cuts a header mid-address, as in "From: a@\nxample.com")
+    for pos in range(len(FUZZ_MSG)):
+        for byte in (FUZZ_MSG[pos] ^ 0xFF, 0x0A):
+            mutated = bytearray(FUZZ_MSG)
+            mutated[pos] = byte
+            _succeeds_or_value_error(bytes(mutated))
+
+
 def test_part_count_bomb_gated():
     parts = b"".join(
         b"--B\r\nContent-Type: text/plain\r\n\r\nx\r\n"
