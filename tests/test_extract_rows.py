@@ -26,7 +26,7 @@ T = "the quick brown fox"
 
 # operator, a valid payload from its own encoder, the pure extractor
 # as ``payload -> number of rows`` (raises where the operator must give
-# an error row), and the operator's output schema at the parent commit
+# an error row), and the operator's public output schema
 OPERATORS = {
     "pdf_text": (
         pdf_text, encode_pdf([T]), lambda b: extract_pdf_bytes(b) and 1,
