@@ -32,7 +32,7 @@ from meza_spark import process as pr
 from meza_spark.llm import dedup as du
 from meza_spark.llm import similarity as sim
 from meza_spark.llm import text as tx
-from meza_spark.util import spread
+from meza_spark.util import lineage_cut, spread
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -3560,7 +3560,7 @@ def json_normalize_lines(spark, sf_dir):
                  .alias("js")))
     # schema inference samples one document, which would re-run the
     # collect_list aggregation for the main pass — materialize once
-    docs = docs.localCheckpoint(eager=False)
+    docs = lineage_cut(docs)
     return (normalize_json(docs, "js", "lines")
             )
 
@@ -8141,7 +8141,7 @@ def q11_value(spark, sf_dir):
     # whole join+agg subtree (Catalyst doesn't dedupe common
     # subplans); materialize the per-part frame once — it's one row
     # per part, orders of magnitude smaller than the fact
-    per_part = per_part.localCheckpoint(eager=False)
+    per_part = lineage_cut(per_part)
     # threshold scales with SF: 1.5× the mean per-part value, not a
     # fixed fraction of the total (which would converge to zero rows
     # as the part count grows with the corpus)

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import lineage_cut
+
 __all__ = ["funnel", "cohort_retention", "moving_zscore", "cusum",
            "ewma", "attribution", "rfm"]
 
@@ -50,13 +52,13 @@ def funnel(df: DataFrame, steps: Sequence[str],
     # ``times`` frame is referenced TWICE by the next step (the step's
     # qualifying join AND the left-join accumulation), so the lazy
     # subtree DOUBLES per step — a 4-step funnel re-ran the step-1 agg
-    # 8× (46 Exchange nodes at sf0.1). ``localCheckpoint`` on every
+    # 8× (46 Exchange nodes at sf0.1). ``lineage_cut`` on every
     # intermediate frame (per-user rows — the small decision table)
     # makes each step compute once; the final frame is consumed once
     # by the count and stays lazy. Purely physical: per-step min
     # timestamps are unchanged.
     for i, step in enumerate(steps[1:], start=2):
-        times = times.localCheckpoint(eager=False)
+        times = lineage_cut(times)
         prev = F.col(f"_t{i - 1}")
         cond = F.col(ts_col) > prev
         if within_seconds is not None:

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import lineage_cut
+
 __all__ = ["degrees", "pagerank", "label_propagation"]
 
 
@@ -60,7 +62,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     Scale shape: the static edge/out-weight frames are materialized
     once; each round is ONE shuffle (contributions aggregated on the
-    destination key) plus a ``localCheckpoint`` lineage cut on the
+    destination key) plus a ``lineage_cut`` on the
     ranks (referenced twice per round: dangling aggregate +
     contributions). The dangling mass D rides as a broadcast ONE-ROW
     decimal aggregate joined lazily into the rank update — n_iter is
@@ -72,13 +74,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
     e = (edges.groupBy(F.col(src).alias("s"), F.col(dst).alias("d"))
          .agg(F.sum(w.cast("decimal(38,6)")).cast("double").alias("w")))
-    # lazy cut (optimization r10, guide §5): the lineage/plan-size
-    # truncation happens at build either way (the frame becomes a
-    # LogicalRDD immediately), but eager=False defers materialization
-    # into the first job that touches it — here the verts barrier
-    # below — instead of paying a dedicated driver job round-trip per
-    # checkpoint. Same stats behavior, same computation, fewer jobs.
-    e = e.localCheckpoint(eager=False)
+    e = lineage_cut(e)
     outw = e.groupBy("s").agg(
         F.sum(F.col("w").cast("decimal(38,6)")).cast("double")
         .alias("ow"))
@@ -90,8 +86,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     verts = (verts.join(outw.select(F.col("s").alias("v"),
                                     F.lit(False).alias("_dang")),
                         on="v", how="left")
-             .select("v", F.coalesce("_dang", F.lit(True)).alias("_dang"))
-             .localCheckpoint())
+             .select("v", F.coalesce("_dang", F.lit(True)).alias("_dang")))
+    verts = lineage_cut(verts, eager=True)
     # one probe job for both static scalars (count + dangling-set
     # emptiness) off the checkpointed verts — optimization r9
     probe = verts.agg(F.count(F.lit(1)).alias("n"),
@@ -111,20 +107,12 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # driver needs no data work here — n_iter is fixed, there is no
     # convergence decision, so nothing requires a scalar on the
     # driver; D/N joins into the rank update lazily and the decimal
-    # accumulation keeps it exact). The per-round localCheckpoint cut
-    # stays: ranks are referenced twice (D aggregate + contributions),
-    # and the cut keeps Catalyst plans constant-size round over round.
+    # accumulation keeps it exact). The per-round cut stays: ranks are
+    # referenced twice (D aggregate + contributions), and the cut keeps
+    # Catalyst plans constant-size round over round.
     any_dangling = bool(probe["any_dang"])
     for _ in range(n_iter):
-        # eager=False: the cut still replaces the round's plan with a
-        # LogicalRDD (constant-size Catalyst plans round over round)
-        # but materializes inside the consuming job — n_iter fixed
-        # driver job round-trips removed from every pagerank build
-        # (optimization r10; the checkpointed RDD is persisted on
-        # first use, so the two per-round references — the dangling
-        # aggregate and the contributions join — still compute it
-        # exactly once)
-        cut = ranks.localCheckpoint(eager=False)
+        cut = lineage_cut(ranks)
         contrib = (e.join(cut.select(F.col("v").alias("s"), "r"), on="s")
                    .join(outw, on="s")
                    .select("d", (F.col("r") * F.col("w") / F.col("ow"))
@@ -148,8 +136,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
 
 
 def label_propagation(edges: DataFrame, src: str = "src",
-                      dst: str = "dst", n_iter: int = 5,
-                      checkpoint_every: int = 4) -> DataFrame:
+                      dst: str = "dst", n_iter: int = 5) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007): every vertex starts labeled with its own id, and each
     round adopts the most frequent label among its neighbors, ties
@@ -164,9 +151,8 @@ def label_propagation(edges: DataFrame, src: str = "src",
     rows. Unlike ``pagerank`` (which needs a scalar per round anyway)
     no round REQUIRES a materialization, so rounds pipeline into one
     job and the lineage — linear in rounds, join+2 aggs each — is cut
-    only every ``checkpoint_every`` rounds (measured at sf0.1: the
-    unconditional per-round localCheckpoint made the 3-round gate 6×
-    slower; 0 disables cutting entirely). Synchronous LPA can
+    only every 4th round (measured at sf0.1: an unconditional
+    per-round cut made the 3-round gate 6× slower). Synchronous LPA can
     oscillate on bipartite structures; the fixed round budget bounds
     that by construction (communities are a heuristic label, not a
     fixpoint claim).
@@ -191,13 +177,11 @@ def label_propagation(edges: DataFrame, src: str = "src",
       best-label aggregation already covers every vertex — the old
       ``coalesce(bl, l)`` could never see a NULL.
     """
-    und = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .unionByName(edges.select(F.col(dst).alias("a"),
-                                     F.col(src).alias("b")))
-           .where(F.col("a") != F.col("b"))
-           .repartition("b")
-           .distinct()
-           .localCheckpoint(eager=False))
+    und = lineage_cut(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .unionByName(edges.select(F.col(dst).alias("a"),
+                                  F.col(src).alias("b")))
+        .where(F.col("a") != F.col("b")).repartition("b").distinct())
     labels = (und.select(F.col("a").alias("v")).distinct()
               .withColumn("l", F.col("v")))
     for i in range(n_iter):
@@ -213,9 +197,7 @@ def label_propagation(edges: DataFrame, src: str = "src",
             labels = und.groupBy(F.col("a").alias("v")) \
                         .agg(F.min("b").alias("l"))
             continue
-        cut = (labels.localCheckpoint(eager=False)
-               if checkpoint_every and i % checkpoint_every == 0
-               else labels)
+        cut = lineage_cut(labels) if i % 4 == 0 else labels
         counts = (und.join(cut.select(F.col("v").alias("b"),
                                       F.col("l").alias("nl")), on="b")
                   .groupBy(F.col("a").alias("v"), "nl")

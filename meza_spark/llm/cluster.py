@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..util import barrier
+from ..util import barrier, lineage_cut, spread
 
 __all__ = ["connected_components", "near_dedup",
            "near_dedup_incremental", "semantic_dedup"]
@@ -69,9 +69,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     """
     t, spark = small_quotient_threshold, pairs.sparkSession
     # one lazy cut: the pair subtree runs once, whichever path reads it
-    raw = (pairs.select(F.col(id_a).cast("long").alias("s"),
-                        F.col(id_b).cast("long").alias("d"))
-           .localCheckpoint(eager=False))
+    raw = lineage_cut(pairs.select(F.col(id_a).cast("long").alias("s"),
+                                   F.col(id_b).cast("long").alias("d")))
     pdf = raw.limit(t + 1).toPandas()
     if len(pdf) <= t:
         # an empty pandas frame would leave Arrow for an RDD of unknown
@@ -80,27 +79,24 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         return (spark.createDataFrame(roots) if len(roots)
                 else raw.toDF("id", "component").limit(0))
     # symmetrize: explode each pair of the cut into both directions
-    edges = (raw.select(F.explode(F.array(
+    edges = lineage_cut(raw.select(F.explode(F.array(
         F.struct("s", "d"),
         F.struct(F.col("d").alias("s"), F.col("s").alias("d")))).alias("e"))
-        .select("e.s", "e.d").distinct()
-        .localCheckpoint(eager=False))
+        .select("e.s", "e.d").distinct())
     # init folds the first propagation in: label₀(v) = min(v, min
     # neighbor) — the groupBy doubles as the distinct-vertices pass
     # (every vertex appears as `s` in the symmetrized edge list), and
     # near-clique duplicate clusters converge on the very next round
-    labels = (edges.groupBy("s").agg(F.min("d").alias("_nd"))
-              .select(F.col("s").alias("v"),
-                      F.least("s", "_nd").alias("label"))
-              .localCheckpoint(eager=False))
+    labels = lineage_cut(edges.groupBy("s").agg(F.min("d").alias("_nd"))
+                         .select(F.col("s").alias("v"),
+                                 F.least("s", "_nd").alias("label")))
     out_cols = [F.col("v").alias("id"), F.col("label").alias("component")]
     # contracted (quotient) edge set: current labels of each endpoint
     lmap = lambda side: labels.select(  # noqa: E731
         F.col("v").alias(side), F.col("label").alias(f"_n{side}"))
-    ce = (edges.join(lmap("s"), on="s").join(lmap("d"), on="d")
-          .select(F.col("_ns").alias("s"), F.col("_nd").alias("d"))
-          .where(F.col("s") != F.col("d")).distinct()
-          .localCheckpoint(eager=False))
+    ce = lineage_cut(edges.join(lmap("s"), on="s").join(lmap("d"), on="d")
+                     .select(F.col("_ns").alias("s"), F.col("_nd").alias("d"))
+                     .where(F.col("s") != F.col("d")).distinct())
     # the first quotient's cut: the bounded collect reads it once, the
     # loop re-references it without recomputing the init hop
     qdf = ce.limit(t + 1).toPandas()
@@ -301,16 +297,14 @@ def near_dedup_incremental(new: DataFrame, seen: DataFrame,
         n = kwargs.get("n", 3)
         min_jaccard = kwargs.get("min_jaccard", 0.0)
         join_on = kwargs.get("join_on")
-        from ..util import spread
-
-        sh_new = _ngram_side(spread(new), text_col, id_col, "id_a",
-                             n, join_on).localCheckpoint(eager=False)
+        sh_new = lineage_cut(_ngram_side(spread(new), text_col, id_col,
+                                         "id_a", n, join_on))
         sh_seen = _ngram_side(spread(seen), text_col, id_col, "id_b",
                               n, join_on)
         hits = _ngram_pairs(sh_new, sh_seen, self_join=False,
                             min_jaccard=min_jaccard, join_on=join_on)
-        dup_new = (hits.select(F.col("id_a").alias(id_col)).distinct()
-                   .localCheckpoint(eager=False))
+        dup_new = lineage_cut(hits.select(F.col("id_a").alias(id_col))
+                              .distinct())
         sh_fresh = sh_new.join(
             dup_new.select(F.col(id_col).alias("id_a")),
             on="id_a", how="left_anti")

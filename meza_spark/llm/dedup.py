@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..util import spread
+from ..util import lineage_cut, spread
 from .text import shingles_from_tokens, tokens
 
 __all__ = ["exact_dedup", "dedup_lines", "minhash_signatures",
@@ -254,7 +254,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # kernel-once hold under EVERY join strategy, local or 100 TB.
     # ``dropped`` stays lazy off the original subtree: callers that
     # never evaluate it (the common case) pay nothing.
-    banded = banded.localCheckpoint(eager=False)
+    banded = lineage_cut(banded)
     left = banded.alias("l")
     right = banded.alias("r")
     pairs = (left.join(right, on=["band", "bh"])
@@ -710,7 +710,7 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     # kernel-once under every join strategy — same rationale as the
     # minhash band-index checkpoint above (the chunk index is
     # (id, sig, ci, cv) ≈ 32 B/row, tiny against the text)
-    banded = banded.localCheckpoint(eager=False)
+    banded = lineage_cut(banded)
     l, r = banded.alias("l"), banded.alias("r")
     pairs = (l.join(r, on=["ci", "cv"])
              .where(F.col("l._id") < F.col("r._id"))

@@ -12,6 +12,8 @@ pandas_udf type-hint inference for the NFKC step in normalize_text.
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..util import lineage_cut
+
 __all__ = ["token_count", "quality_score", "lang_id", "fingerprint",
            "repetition_signals", "c4_quality_flags", "scrub_pii",
            "shingles", "tokens", "char_entropy", "chunk_documents",
@@ -464,7 +466,7 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
     # would otherwise EACH re-run the tokenize+explode+agg subtree
     # (Catalyst has no common-subplan reuse); the vocab is Zipf-
     # bounded, so materializing it once is cheap at any corpus size
-    freq = freq.localCheckpoint(eager=False)
+    freq = lineage_cut(freq)
     total = freq.agg(F.sum("_n").alias("_total"))
     if broadcast_vocab:
         freq = F.broadcast(freq)
@@ -788,7 +790,7 @@ def bm25_topk(df: DataFrame, query: str, text_col: str = "text",
           .alias(f"_tf_{i}") for i, t in enumerate(q_terms)])
     # one row per doc — cheap to materialize; feeds N/avgdl AND the
     # scoring path, so the corpus tokenize runs exactly once
-    per_doc = per_doc.localCheckpoint(eager=False)
+    per_doc = lineage_cut(per_doc)
     stats = per_doc.agg(F.count(F.lit(1)).alias("_N"),
                         F.sum("_dl").alias("_tot"))
     # Column-API unpivot — interpolating user query terms into a

@@ -25,7 +25,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import range_offsets
+from .util import lineage_cut, range_offsets
 
 __all__ = [
     "cut", "tfilter", "grep", "unique", "hash_", "sort", "peek",
@@ -1031,7 +1031,7 @@ def resolve_entities(df: DataFrame, id_col: str, match_col: str,
                .withColumn("entity_id",
                            F.coalesce("_er_comp", F.col(id_col)))
                .drop("_er_id", "_er_comp"))
-    members = members.localCheckpoint(eager=False)  # vote fan-out below
+    members = lineage_cut(members)  # vote fan-out below
     base = members.groupBy("entity_id").agg(
         F.count(F.lit(1)).alias("n_members"))
     out = base
@@ -1192,9 +1192,8 @@ def co_occurrence(df: DataFrame, group_col: str, item_col: str,
     # lazily that re-ran the scan + distinct subtree three times. The
     # checkpointed frame is ids-only (group key + item), the same
     # lightweight-proxy shape every pair generator here stages.
-    base = df.select(F.col(group_col).alias("_g"),
-                     F.col(item_col).alias("_i")).distinct() \
-        .localCheckpoint(eager=False)
+    base = lineage_cut(df.select(F.col(group_col).alias("_g"),
+                                 F.col(item_col).alias("_i")).distinct())
     a = base.select("_g", F.col("_i").alias("item_a"))
     b = base.select("_g", F.col("_i").alias("item_b"))
     if max_group is not None:
@@ -1209,9 +1208,9 @@ def co_occurrence(df: DataFrame, group_col: str, item_col: str,
         # pairs for any group absent from the capped side, so the
         # quadratic explosion never forms — the uncapped leg's
         # mega-group rows hash-probe and drop.
-        keep_g = (base.groupBy("_g").agg(F.count(F.lit(1)).alias("_n"))
-                  .where(F.col("_n") <= max_group).select("_g")
-                  .localCheckpoint(eager=False))
+        keep_g = lineage_cut(
+            base.groupBy("_g").agg(F.count(F.lit(1)).alias("_n"))
+            .where(F.col("_n") <= max_group).select("_g"))
         a = a.join(keep_g, on="_g")
     pairs = (a.join(b, on="_g")
              .where(F.col("item_a") < F.col("item_b"))

@@ -28,6 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import lineage_cut
+
 __all__ = ["profile", "histogram", "winsorize", "skew_report", "psi_drift",
            "robust_outliers", "benford"]
 
@@ -214,7 +216,7 @@ def psi_drift(df_a: DataFrame, df_b: DataFrame, col: str,
                   .groupBy("bucket").agg(F.count(F.lit(1)).alias("_n")))
         # nbins-row barrier: without it the totals branch re-runs the
         # whole scan+agg (no common-subplan reuse in Catalyst)
-        counts = counts.localCheckpoint(eager=False)
+        counts = lineage_cut(counts)
         total = counts.agg(F.sum("_n").alias("_t"))
         return (counts.crossJoin(F.broadcast(total))
                 .select("bucket", (F.col("_n").cast("double")

@@ -1,4 +1,4 @@
-"""Engine-internal utilities."""
+"""Engine-internal utilities; ``lineage_cut`` is the only checkpoint call."""
 
 from __future__ import annotations
 
@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (DataType, LongType, StringType, StructField,
                                StructType)
 
-__all__ = ["spread", "barrier", "range_offsets", "extract_rows",
-           "plan_stats"]
+__all__ = ["spread", "lineage_cut", "barrier", "range_offsets",
+           "extract_rows", "plan_stats"]
 
 
 def spread(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -45,6 +45,27 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     return df
 
 
+def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage: a ``LogicalRDD`` over its rows, so later
+    plans neither re-run nor re-plan the subtree. With a checkpoint dir
+    (``setCheckpointDir`` or ``spark.checkpoint.dir``) it is a reliable
+    ``checkpoint``, whose files outlive their executor (deleted only
+    under ``spark.cleaner.referenceTracking.cleanCheckpoints``);
+    otherwise a ``localCheckpoint``, whose blocks die with it.
+
+    ``eager=False`` truncates lineage and plan size at once (under AQE
+    the upstream shuffle stages even run now) but computes the final
+    stage inside the first job that reads the cut; later reads reuse
+    the stored rows. A reliable lazy cut adds a write job to that first
+    read, which computes the rows again from the same shuffle outputs,
+    so an order-sensitive subtree (a floating-point sum) may differ in
+    low bits between that job and later reads.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
+
+
 def barrier(df: DataFrame, *more: DataFrame,
             probe: Callable[[DataFrame], Any] = DataFrame.count
             ) -> tuple:
@@ -54,7 +75,7 @@ def barrier(df: DataFrame, *more: DataFrame,
     engine's only use of the Dataset cache. Returns
     ``(*cuts, probe_value)``, the cuts in argument order.
 
-    Why not plain ``localCheckpoint``: its ``LogicalRDD`` keeps the
+    Why not a plain ``lineage_cut``: its ``LogicalRDD`` keeps the
     *estimated* statistics of the plan it replaced (``originStats``).
     Catalyst's default size estimate for a join is the PRODUCT of its
     children's sizes, so in an iterative loop the per-round estimate
@@ -65,10 +86,10 @@ def barrier(df: DataFrame, *more: DataFrame,
     (observed: 1 s → 5.8 s → 109 s rounds on a 5 k-vertex graph).
 
     The barrier: persist → ``probe(df)`` (one materializing job; stats
-    become the measured cache size) → eager ``localCheckpoint`` of each
+    become the measured cache size) → eager ``lineage_cut`` of each
     frame (a cache read; lineage truncates and originStats carry the
-    small, real number) → unpersist (the checkpoint blocks are
-    independent of the cache), so no cache outlives the call.
+    small, real number) → unpersist (the cut no longer reads the
+    cache), so no cache outlives the call.
     ``more`` are frames ``df`` is built from: they are persisted first,
     so ``df``'s cached plan reads their caches and the one probe fills
     them all. ``probe`` defaults to the row count; any action on
@@ -79,7 +100,7 @@ def barrier(df: DataFrame, *more: DataFrame,
     for f in frames:
         f.persist()
     value = probe(df)
-    cuts = [f.localCheckpoint() for f in (df, *more)]
+    cuts = [lineage_cut(f, eager=True) for f in (df, *more)]
     for f in frames:
         f.unpersist()
     return (*cuts, value)
@@ -96,9 +117,7 @@ def range_offsets(df: DataFrame, keys: str | Sequence[str],
     its within-partition record number ``_idx``
     (``monotonically_increasing_id``'s documented low 33 bits). A lazy
     lineage cut freezes that layout, so both passes read identical
-    partition contents (under AQE, ``localCheckpoint(eager=False)``
-    still runs every upstream shuffle stage at call time; it defers
-    only the final stage). Pass 1 sums ``weight`` (or counts rows) per
+    partition contents. Pass 1 sums ``weight`` (or counts rows) per
     partition — a partitions-sized agg; the driver folds the sums into
     exclusive offsets (O(partitions) integers, empty partitions get
     the running total); pass 2 reads ``_off`` from that literal array
@@ -107,12 +126,12 @@ def range_offsets(df: DataFrame, keys: str | Sequence[str],
     rows. An empty ``df`` gives an empty ``tagged`` and total 0.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
-    tagged = (df.repartitionByRange(*[F.col(k) for k in keys])
-              .sortWithinPartitions(*keys)
-              .withColumn("_pid", F.spark_partition_id())
-              .withColumn("_idx", F.monotonically_increasing_id()
-                          .bitwiseAND(F.lit((1 << 33) - 1)))
-              .localCheckpoint(eager=False))
+    tagged = lineage_cut(
+        df.repartitionByRange(*[F.col(k) for k in keys])
+        .sortWithinPartitions(*keys)
+        .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_idx", F.monotonically_increasing_id()
+                    .bitwiseAND(F.lit((1 << 33) - 1))))
     size = F.sum(weight) if weight is not None else F.count("*")
     sums = dict(tagged.groupBy("_pid").agg(size).collect())
     offsets, total = [], 0

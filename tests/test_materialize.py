@@ -3,7 +3,8 @@ none launches a Spark job its data does not need.
 
 Operators are records in, records out; the only Dataset cache the
 engine takes is the stats barrier in ``meza_spark.util.barrier``, which
-drops it before returning. A cache that outlived its operator would
+drops it before returning, and the only checkpoint is
+``meza_spark.util.lineage_cut``. A cache that outlived its operator would
 serve stale rows to a later call over a rewritten input.
 """
 
@@ -57,31 +58,39 @@ def test_no_cache_outlives_its_operator(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def _cache_calls(path):
-    """Line numbers of every ``.persist(...)`` / ``.cache(...)`` call."""
+def _calls(path, attrs):
+    """Line numbers of every ``.<attr>(...)`` call with ``attr`` in
+    ``attrs``."""
     with open(path, encoding="utf-8") as fh:
         tree = ast.parse(fh.read())
     return [node.lineno for node in ast.walk(tree)
             if isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
-            and node.func.attr in ("persist", "cache")]
+            and node.func.attr in attrs]
+
+
+# each policy has one owner in util.py: the Dataset cache belongs to
+# ``barrier``, every checkpoint to ``lineage_cut``
+_OWNERS = {"barrier": ("persist", "cache"),
+           "lineage_cut": ("localCheckpoint", "checkpoint")}
 
 
 def test_dataset_cache_only_in_barrier():
     util = os.path.join(ROOT, "meza_spark", "util.py")
     with open(util, encoding="utf-8") as fh:
-        fn = next((n for n in ast.parse(fh.read()).body
-                   if isinstance(n, ast.FunctionDef)
-                   and n.name == "barrier"), None)
-    inside = range(fn.lineno, fn.end_lineno + 1) if fn else range(0)
+        fns = {n.name: range(n.lineno, n.end_lineno + 1)
+               for n in ast.parse(fh.read()).body
+               if isinstance(n, ast.FunctionDef)}
     paths = glob.glob(os.path.join(ROOT, "meza_spark", "**", "*.py"),
                       recursive=True)
     paths.append(os.path.join(ROOT, "__spark_entry__.py"))
-    stray = [f"{os.path.relpath(p, ROOT)}:{line}" for p in sorted(paths)
-             for line in _cache_calls(p)
-             if not (p == util and line in inside)]
-    assert not stray, stray
-    assert any(line in inside for line in _cache_calls(util))
+    for owner, attrs in _OWNERS.items():
+        inside = fns.get(owner, range(0))
+        stray = [f"{os.path.relpath(p, ROOT)}:{line}" for p in sorted(paths)
+                 for line in _calls(p, attrs)
+                 if not (p == util and line in inside)]
+        assert not stray, (owner, stray)
+        assert any(line in inside for line in _calls(util, attrs)), owner
 
 
 def test_spread_after_a_shuffle_launches_no_job(spark, count_jobs):
