@@ -9,7 +9,7 @@ regexp — row-local, codegen, zero Python): line-count and length
 stats, alphanumeric fraction, auto-generated markers, long base64 /
 hex blob detection (minified or embedded-data files).
 
-``python_source_facts`` is an Arrow ``mapInPandas``: per file it
+``python_source_facts`` is row-local (``util.payload_rows``): per file it
 parses with ``ast`` (counts defs/classes, collects module+def+class
 docstrings), lexes with ``tokenize`` (comment text), and computes a
 STRUCTURAL fingerprint — the token stream with identifiers masked to
@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from meza_spark.util import payload_rows
 
 _AUTOGEN_MARKERS = ("auto-generated", "autogenerated",
                     "do not edit", "generated by")
@@ -132,39 +134,17 @@ def python_facts_bytes(src: str) -> dict:
 
 def python_source_facts(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id") -> DataFrame:
-    """Structural Python facts per row — row-local Arrow
-    ``mapInPandas``, zero shuffle. ``norm_sha`` groups renamed-
-    identifier copies (join it for structural code dedup)."""
-    from typing import Iterator
+    """Structural Python facts per row — row-local
+    (:func:`meza_spark.util.payload_rows`), zero shuffle. ``norm_sha``
+    groups renamed-identifier copies (join it for structural code
+    dedup)."""
+    keys = ("parse_ok", "n_defs", "n_classes", "docstrings", "comments",
+            "norm_sha")
 
-    import pandas as pd
-    from pyspark.sql.types import (BooleanType, IntegerType, LongType,
-                                   StringType, StructField, StructType)
+    def rows(_key, src):
+        r = python_facts_bytes(src)
+        return [tuple(r[k] for k in keys)]
 
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("parse_ok", BooleanType()),
-        StructField("n_defs", IntegerType()),
-        StructField("n_classes", IntegerType()),
-        StructField("docstrings", StringType()),
-        StructField("comments", StringType()),
-        StructField("norm_sha", StringType()),
-    ])
-    names = [f.name for f in out_schema]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_b in batches:
-            rows = []
-            for mid, src in zip(pdf_b[id_col], pdf_b[text_col]):
-                if src is None:
-                    continue
-                r = python_facts_bytes(str(src))
-                rows.append((mid, r["parse_ok"], r["n_defs"],
-                             r["n_classes"], r["docstrings"],
-                             r["comments"], r["norm_sha"]))
-            yield pd.DataFrame(rows, columns=names)
-
-    from meza_spark.util import spread
-
-    return spread(df.select(id_col, text_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return payload_rows(df, rows, "parse_ok boolean, n_defs int, "
+                        "n_classes int, docstrings string, comments string, "
+                        "norm_sha string", text_col, id_col)

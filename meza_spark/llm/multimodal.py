@@ -1,5 +1,19 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata, processed via Arrow-batched ``mapInPandas``.
+columns with typed metadata, processed row-local through
+:func:`meza_spark.util.payload_rows` (``spread`` plus one Arrow-batched
+``mapInPandas``; no operator here writes its own).
+
+Every operator is a per-payload function plus a DDL field list. The
+three with an ``unsupported=`` argument (``decode_image``,
+``decode_audio``, ``decode_video``) share one policy,
+:func:`_unsupported_rows`, with one catch tuple (``NotImplementedError``,
+``ValueError``): ``'error'`` fails the job, ``'skip'`` drops the
+payload, ``'stub'`` (``decode_image`` only) emits the deterministic fake
+stats, and any other value raises when the frame is built.
+``image_features``, ``frame_sample`` and ``resize_image`` always fall
+back to their stub inside their own function, and
+``parse_media_headers`` needs no policy: a container it does not
+parse gives format ``'unknown'``.
 
 Decode is REAL for every format stdlib+numpy can handle (r2 verdict
 #4): BMP (24-bit BI_RGB), netpbm PPM/P6 + PGM/P5, 8/16-bit PNG both
@@ -17,8 +31,9 @@ the plumbing tests); a cluster that wants those adds a decoder to
 Scale notes: binary payloads ride in Arrow record batches; keep
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` low (e.g. 64) for
 multi-MB blobs so a batch fits in worker memory. Feature extraction is
-mapInPandas (1 pass, no shuffle); only the optional group-bys shuffle
-fixed-width features, never the blobs.
+one mapInPandas pass; ``spread`` round-robins a frame with fewer
+partitions than cores (a no-op at scale), and only the optional
+group-bys shuffle fixed-width features.
 """
 
 from __future__ import annotations
@@ -28,16 +43,15 @@ import operator
 import re
 import struct
 import zlib
-from collections.abc import Iterator
 from functools import reduce
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
-    StructType,
+    BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
+
+from ..util import payload_rows
 
 __all__ = ["media_schema", "attach_media_meta", "decode_image",
            "decode_audio", "decode_video", "decode_pixels",
@@ -3984,11 +3998,40 @@ def _decode_image_stub(payload: bytes) -> dict:
             "crc": zlib.crc32(payload)}
 
 
+# What a decoder raises for a payload it cannot decode: the one catch
+# of the ``unsupported=`` policy (MemoryError and decoder bugs still
+# fail the job)
+_UNDECODABLE = (NotImplementedError, ValueError)
+
+
+def _unsupported_rows(unsupported: str, decode, stub=None):
+    """The ``payload_rows`` fn of an ``unsupported=`` operator.
+    ``decode(b)`` returns one payload's rows; when it raises
+    ``_UNDECODABLE``, ``'error'`` re-raises (the job fails), ``'skip'``
+    gives no row and ``'stub'`` — offered only with a ``stub`` — gives
+    ``stub(b)``'s rows. Any other ``unsupported`` raises ``ValueError``
+    here, while the frame is built."""
+    modes = ("error", "skip", "stub") if stub else ("error", "skip")
+    if unsupported not in modes:
+        raise ValueError(f"unsupported={unsupported!r}: expected one of "
+                         f"{', '.join(modes)}")
+
+    def rows(_key, b):
+        try:
+            return decode(b)
+        except _UNDECODABLE:
+            if unsupported == "error":
+                raise
+            return stub(b) if unsupported == "stub" else []
+
+    return rows
+
+
 def decode_image(df: DataFrame, payload_col: str = "payload",
                  id_col: str = "media_id",
                  unsupported: str = "error") -> DataFrame:
-    """Decode images → per-image pixel stats via Arrow-batched
-    mapInPandas.
+    """Decode images → per-image pixel stats, row-local
+    (:func:`meza_spark.util.payload_rows`).
 
     REAL decode for BMP/PPM/PGM/PNG/GIF/TIFF and baseline+progressive
     JPEG (see :func:`decode_pixels`): width/height/channels from the
@@ -3998,42 +4041,18 @@ def decode_image(df: DataFrame, payload_col: str = "payload",
     (drop the row; a curation pipeline's usual choice), or ``'stub'``
     (deterministic fake stats — plumbing tests only).
     """
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("mean_pixel", DoubleType()),
-        StructField("crc", LongType()),
-    ])
+    def decode(b):
+        px = decode_pixels(b)
+        return [(int(px.shape[1]), int(px.shape[0]), int(px.shape[2]),
+                 float(px.mean()), zlib.crc32(b))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                try:
-                    px = decode_pixels(b)
-                except (NotImplementedError, ValueError):
-                    if unsupported == "skip":
-                        continue
-                    if unsupported == "stub":
-                        d = _decode_image_stub(b)
-                        rows.append((mid, d["width"], d["height"], None,
-                                     d["mean_pixel"], d["crc"]))
-                        continue
-                    raise
-                rows.append((mid, int(px.shape[1]), int(px.shape[0]),
-                             int(px.shape[2]), float(px.mean()),
-                             zlib.crc32(b)))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
+    def stub(b):
+        d = _decode_image_stub(b)
+        return [(d["width"], d["height"], None, d["mean_pixel"], d["crc"])]
 
-    from ..util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return payload_rows(df, _unsupported_rows(unsupported, decode, stub),
+                        "width int, height int, channels int, "
+                        "mean_pixel double, crc bigint", payload_col, id_col)
 
 
 def decode_audio(df: DataFrame, payload_col: str = "payload",
@@ -4048,42 +4067,19 @@ def decode_audio(df: DataFrame, payload_col: str = "payload",
     G.711 tables, linear PCM, float — :func:`_decode_au`), and FLAC
     (all subframe types, Rice residuals, stereo decorrelation,
     CRC-8/CRC-16/MD5 verified — :func:`meza_spark.llm.flac
-    .decode_flac`). MP3 stays an honest ``NotImplementedError``
-    (perceptual codec — headers/duration via parse_media_headers).
+    .decode_flac`). MP3 and Ogg stay an honest ``NotImplementedError``
+    (perceptual codecs — headers/duration via parse_media_headers).
     Unknown or still-compressed audio follows ``unsupported``
     ('error' | 'skip')."""
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("n_samples", LongType()),
-        StructField("duration_ms", LongType()),
-        StructField("mean_amp", DoubleType()),
-        StructField("rms", DoubleType()),
-        StructField("peak", DoubleType()),
-    ])
+    def decode(b):
+        d = _decode_audio_bytes(b)
+        return [(d["sample_rate"], d["channels"], d["n_samples"],
+                 d["duration_ms"], d["mean"], d["rms"], d["peak"])]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    d = _decode_audio_bytes(bytes(payload))
-                except ValueError:
-                    if unsupported == "skip":
-                        continue
-                    raise
-                rows.append((mid, d["sample_rate"], d["channels"],
-                             d["n_samples"], d["duration_ms"],
-                             d["mean"], d["rms"], d["peak"]))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    from ..util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return payload_rows(df, _unsupported_rows(unsupported, decode),
+                        "sample_rate int, channels int, n_samples bigint, "
+                        "duration_ms bigint, mean_amp double, rms double, "
+                        "peak double", payload_col, id_col)
 
 
 def _video_frames_bytes(b: bytes):
@@ -4155,7 +4151,8 @@ def _frames_with_decoder(b: bytes, decoder):
 def decode_video(df: DataFrame, payload_col: str = "payload",
                  id_col: str = "media_id",
                  unsupported: str = "error", decoder=None) -> DataFrame:
-    """REAL per-frame video decode via Arrow-batched ``mapInPandas``:
+    """REAL per-frame video decode, row-local
+    (:func:`meza_spark.util.payload_rows`):
     one output row per frame with true pixel statistics. Containers:
     animated GIF (full GCE walk — transparency, delays, disposal
     methods 0-3), APNG (acTL/fcTL/fdAT walk — blend source/over,
@@ -4172,37 +4169,15 @@ def decode_video(df: DataFrame, payload_col: str = "payload",
     :func:`_frames_with_decoder` for the contract; budgets and the
     row-per-frame shape are enforced on its output too. Without it,
     compressed video keeps the honest ValueError gate."""
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("ts_ms", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("mean_pixel", DoubleType()),
-    ])
+    def decode(b):
+        frames, ts = _frames_with_decoder(b, decoder)
+        return [(i, int(t), int(px.shape[1]), int(px.shape[0]),
+                 float(px.mean()))
+                for i, (px, t) in enumerate(zip(frames, ts))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    frames, ts = _frames_with_decoder(bytes(payload),
-                                                      decoder)
-                except (NotImplementedError, ValueError):
-                    if unsupported == "skip":
-                        continue
-                    raise
-                for i, (px, t) in enumerate(zip(frames, ts)):
-                    rows.append((mid, i, int(t), int(px.shape[1]),
-                                 int(px.shape[0]), float(px.mean())))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    from ..util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return payload_rows(df, _unsupported_rows(unsupported, decode),
+                        "frame_idx int, ts_ms bigint, width int, "
+                        "height int, mean_pixel double", payload_col, id_col)
 
 
 def image_features(df: DataFrame, payload_col: str = "payload",
@@ -4213,36 +4188,25 @@ def image_features(df: DataFrame, payload_col: str = "payload",
     grid → [0, 1]. Undecodable payloads fall back to the deterministic
     sha256-chain stub (plumbing shape preserved either way)."""
     import numpy as np
-    from pyspark.sql.types import ArrayType, FloatType
 
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("features", ArrayType(FloatType())),
-    ])
     dim = resize_to
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                try:
-                    px = decode_pixels(b)
-                    gray = px.mean(axis=2).ravel()
-                    idx = (np.arange(dim) * gray.size) // dim
-                    vec = (gray[idx] / 255.0).astype(float).tolist()
-                except (NotImplementedError, ValueError):
-                    buf, h = b"", b
-                    while len(buf) < dim:
-                        h = hashlib.sha256(h).digest()
-                        buf += h
-                    vec = [c / 255.0 for c in buf[:dim]]
-                rows.append((mid, vec))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
+    def rows(_key, b):
+        try:
+            px = decode_pixels(b)
+            gray = px.mean(axis=2).ravel()
+            idx = (np.arange(dim) * gray.size) // dim
+            vec = (gray[idx] / 255.0).astype(float).tolist()
+        except _UNDECODABLE:
+            buf, h = b"", b
+            while len(buf) < dim:
+                h = hashlib.sha256(h).digest()
+                buf += h
+            vec = [c / 255.0 for c in buf[:dim]]
+        return [(vec,)]
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    return payload_rows(df, rows, "features array<float>", payload_col,
+                        id_col)
 
 
 def frame_sample(df: DataFrame, payload_col: str = "payload",
@@ -4257,55 +4221,43 @@ def frame_sample(df: DataFrame, payload_col: str = "payload",
     frame on screen at that instant, re-encoded as a 24-bit BMP
     payload (RGBA canvases drop alpha), with ``frame_idx`` the source
     frame's index and ``ts_ms`` the tick. Undecodable payloads keep
-    the legacy deterministic sha256 stub (5 fake frames) so the
-    plumbing shape is exercised even where no codec applies."""
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("ts_ms", LongType()),
-        StructField("frame", BinaryType()),
-    ])
+    the legacy deterministic sha256 stub (5 fake frames, each seeded
+    by the payload and its ``id_col``) so the plumbing shape is
+    exercised even where no codec applies."""
+    def rows(mid, b):
+        try:
+            frames, ts = _frames_with_decoder(b, decoder)
+        except _UNDECODABLE:
+            # stub: pretend 5 frames, sample every `every_ms`
+            return [(i, t, hashlib.sha256(
+                        b + struct.pack("<qi", mid, i)).digest())
+                    for i, t in enumerate(range(0, 5000, every_ms))]
+        out = []
+        last = ts[-1] if ts else 0
+        fi = 0
+        enc_fi, enc = -1, None      # encode each frame ONCE
+        for t in range(0, last + 1, every_ms):
+            while fi + 1 < len(ts) and ts[fi + 1] <= t:
+                fi += 1
+            if fi != enc_fi:
+                px = frames[fi][:, :, :3]  # RGBA→RGB for BMP
+                if px.shape[2] == 1:
+                    import numpy as np
+                    px = np.repeat(px, 3, axis=2)
+                enc_fi, enc = fi, _encode_bmp(px)
+            out.append((fi, t, enc))
+        return out
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                try:
-                    frames, ts = _frames_with_decoder(b, decoder)
-                except (NotImplementedError, ValueError):
-                    # stub: pretend 5 frames, sample every `every_ms`
-                    dur = 5000
-                    for i, t in enumerate(range(0, dur, every_ms)):
-                        tag = struct.pack("<qi", mid, i)
-                        rows.append((mid, i, t,
-                                     hashlib.sha256(b + tag).digest()))
-                    continue
-                last = ts[-1] if ts else 0
-                fi = 0
-                enc_fi, enc = -1, None      # encode each frame ONCE
-                for t in range(0, last + 1, every_ms):
-                    while fi + 1 < len(ts) and ts[fi + 1] <= t:
-                        fi += 1
-                    if fi != enc_fi:
-                        px = frames[fi][:, :, :3]  # RGBA→RGB for BMP
-                        if px.shape[2] == 1:
-                            import numpy as np
-                            px = np.repeat(px, 3, axis=2)
-                        enc_fi, enc = fi, _encode_bmp(px)
-                    rows.append((mid, fi, t, enc))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=out_schema)
+    return payload_rows(df, rows, "frame_idx int, ts_ms bigint, "
+                        "frame binary", payload_col, id_col)
 
 
 def resize_image(df: DataFrame, width: int, height: int,
                  payload_col: str = "payload",
                  id_col: str = "media_id") -> DataFrame:
-    """Resize: payload → resized payload + dims via ``mapInPandas``
-    (Arrow batches, executor-local, no shuffle).
+    """Resize: payload → resized payload + dims, row-local
+    (:func:`meza_spark.util.payload_rows`: Arrow batches,
+    executor-local, no shuffle).
 
     REAL nearest-neighbor resample for decodable formats (BMP/PPM/PGM
     → decode, index-sample the pixel grid, re-encode as 24-bit BMP);
@@ -4315,16 +4267,10 @@ def resize_image(df: DataFrame, width: int, height: int,
     """
     import numpy as np
 
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("payload", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-    ])
     nominal = max(16, (width * height) // 64)
 
     def _fake_resize(b: bytes) -> bytes:
-        buf, h = b"", bytes(b) + struct.pack("<ii", width, height)
+        buf, h = b"", b + struct.pack("<ii", width, height)
         while len(buf) < nominal:
             h = hashlib.sha256(h).digest()
             buf += h
@@ -4333,7 +4279,7 @@ def resize_image(df: DataFrame, width: int, height: int,
     def _resize(b: bytes) -> bytes:
         try:
             px = decode_pixels(b)
-        except (NotImplementedError, ValueError):
+        except _UNDECODABLE:
             return _fake_resize(b)
         ys = (np.arange(height) * px.shape[0]) // height
         xs = (np.arange(width) * px.shape[1]) // width
@@ -4347,17 +4293,9 @@ def resize_image(df: DataFrame, width: int, height: int,
             #                          carry it (was a reshape crash)
         return _encode_bmp(small)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [(mid, _resize(bytes(payload)), width, height)
-                    for mid, payload in zip(pdf[id_col], pdf[payload_col])
-                    if payload is not None]
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema])
-
-    from ..util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return payload_rows(df, lambda _key, b: [(_resize(b), width, height)],
+                        "payload binary, width int, height int",
+                        payload_col, id_col)
 
 
 # MPEG audio frame-header tables (ISO/IEC 11172-3 / 13818-3): bitrate
@@ -4920,37 +4858,21 @@ def _parse_mp4(b: bytes) -> dict:
 
 def parse_media_headers(df: DataFrame, payload_col: str = "payload",
                         id_col: str = "media_id") -> DataFrame:
-    """Container-header metadata for every payload via Arrow-batched
-    ``mapInPandas`` — the real (non-stub) sibling of ``decode_image``:
+    """Container-header metadata for every payload, row-local
+    (:func:`meza_spark.util.payload_rows`) — the real (non-stub)
+    sibling of ``decode_image``:
     width/height/channels for PNG/JPEG/GIF/BMP, sample rate/channels/
-    duration for WAV, format sniff for MP4. One pass, no shuffle;
+    duration for WAV, format sniff for MP4, EXIF ``orientation`` 1-8.
+    One pass, no shuffle;
     only headers are touched, so throughput is I/O-bound on the blob
     column, not CPU-bound on decode."""
-    out_schema = StructType([
-        StructField(id_col, LongType()),
-        StructField("format", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("duration_ms", LongType()),
-        StructField("orientation", IntegerType()),   # EXIF 1-8 (r8)
-    ])
-    names = [f.name for f in out_schema]
+    keys = ("format", "width", "height", "channels", "sample_rate",
+            "duration_ms", "orientation")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                d = _parse_headers(bytes(payload))
-                rows.append((mid, d["format"], d["width"], d["height"],
-                             d["channels"], d["sample_rate"],
-                             d["duration_ms"], d["orientation"]))
-            yield pd.DataFrame(rows, columns=names)
+    def rows(_key, b):
+        d = _parse_headers(b)
+        return [tuple(d[k] for k in keys)]
 
-    from ..util import spread
-
-    return spread(df.select(id_col, payload_col)) \
-        .mapInPandas(run, schema=out_schema)
+    return payload_rows(df, rows, "format string, width int, height int, "
+                        "channels int, sample_rate int, duration_ms bigint, "
+                        "orientation int", payload_col, id_col)

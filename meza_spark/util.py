@@ -7,11 +7,10 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (DataType, LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import DataType, LongType, StructField, StructType
 
 __all__ = ["spread", "lineage_cut", "barrier", "range_offsets",
-           "extract_rows", "plan_stats"]
+           "payload_rows", "extract_rows", "plan_stats"]
 
 
 def spread(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -142,10 +141,45 @@ def range_offsets(df: DataFrame, keys: str | Sequence[str],
     return tagged.withColumn("_off", off), total
 
 
+def payload_rows(df: DataFrame, fn: Callable[[Any, Any], Iterable[tuple]],
+                 fields: str, payload_col: str = "payload",
+                 id_col: str = "media_id") -> DataFrame:
+    """Row-local payload boundary, the base layer of every per-payload
+    operator: ``spread``, the ``[id_col, payload_col]`` select and one
+    Arrow ``mapInPandas``, so one payload never crosses a partition
+    boundary.
+
+    ``fn(key, value)`` gets a row's ``id_col`` key and its
+    ``payload_col`` value as Arrow delivers it (``bytes`` for a binary
+    column, ``str`` for a string one) and returns the output rows for
+    it, each a tuple of ``fields`` values (a DDL list such as
+    ``"width int, crc bigint"``). The result has the columns
+    ``[id_col long, *fields]``: one row per tuple, keyed by the key.
+    Null payloads are dropped. An exception from ``fn`` propagates and
+    fails the task; an operator that wants a row instead wraps ``fn``
+    (:func:`extract_rows`, the media decoders' ``unsupported=`` rule).
+    """
+    out_schema = StructType([StructField(id_col, LongType()),
+                             *DataType.fromDDL(fields).fields])
+    names = out_schema.names
+
+    def run(batches):
+        import pandas as pd
+
+        for batch in batches:
+            rows = [(key, *r)
+                    for key, value in zip(batch[id_col], batch[payload_col])
+                    if value is not None for r in fn(key, value)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return spread(df.select(id_col, payload_col)).mapInPandas(
+        run, schema=out_schema)
+
+
 def extract_rows(df: DataFrame, fn: Callable[[bytes], Iterable[tuple]],
                  fields: str, payload_col: str = "payload",
                  id_col: str = "media_id") -> DataFrame:
-    """Row-local payload extraction, the one boundary every
+    """Row-local payload extraction, the boundary every
     ``extract_*_bytes`` operator shares: bad payloads become ``error``
     rows, never failed stages.
 
@@ -159,45 +193,31 @@ def extract_rows(df: DataFrame, fn: Callable[[bytes], Iterable[tuple]],
     ``"TypeName: message"`` for any other exception, both cut to 200
     characters. ``fn``'s rows are collected inside the ``try``, so a
     payload that fails midway leaves no partial rows. Null payloads
-    are dropped. The plan is ``spread`` plus one Arrow
-    ``mapInPandas``: one payload never crosses a partition boundary.
+    are dropped.
 
-    Not for the media decoders (``decode_image``, ``decode_audio``,
-    ``decode_video``, ``resize_image``, ``image_features``,
-    ``frame_sample``): they have no ``error`` column, and their
-    ``unsupported=`` policy raises, skips or stubs, so folding them in
-    would make this helper branch on its caller. Not for the
-    binaryFile readers in ``meza_spark.io`` (warc, webdataset, avro,
-    arrow_ipc) either: they fail the whole file by contract.
+    Two layers: :func:`payload_rows` is the boundary (``spread``, the
+    batch loop, the null skip, the schema) and lets exceptions
+    propagate; this function is ``payload_rows`` over ``fn`` wrapped in
+    the error rule above, with an ``error`` field appended. The media
+    decoders and ``python_source_facts`` use ``payload_rows`` directly.
+    The binaryFile readers in ``meza_spark.io`` (warc, webdataset,
+    avro, arrow_ipc) use neither: they fail the whole file by contract.
     """
-    out_schema = StructType([StructField(id_col, LongType()),
-                             *DataType.fromDDL(fields).fields,
-                             StructField("error", StringType())])
-    names = out_schema.names
-    nulls = (None,) * (len(names) - 2)
+    nulls = (None,) * len(DataType.fromDDL(fields).fields)
 
-    def run(batches):
-        import pandas as pd
+    def guarded(_key, payload):
+        try:
+            return [(*r, None) for r in fn(payload)]
+        except ValueError as e:
+            return [(*nulls, str(e)[:200])]
+        except Exception as e:  # noqa: BLE001 — one hostile payload
+            # must never fail a stage; an escape other than ValueError
+            # is a decoder bug (the fuzz tests pin them), and this row
+            # is the last line of defence
+            return [(*nulls, f"{type(e).__name__}: {e}"[:200])]
 
-        for batch in batches:
-            rows = []
-            for key, payload in zip(batch[id_col], batch[payload_col]):
-                if payload is None:
-                    continue
-                try:
-                    rows += [(key, *r, None) for r in fn(bytes(payload))]
-                except ValueError as e:
-                    rows.append((key, *nulls, str(e)[:200]))
-                except Exception as e:  # noqa: BLE001 — one hostile
-                    # payload must never fail a stage; an escape other
-                    # than ValueError is a decoder bug (the fuzz tests
-                    # pin them), and this row is the last line of defence
-                    rows.append((key, *nulls,
-                                 f"{type(e).__name__}: {e}"[:200]))
-            yield pd.DataFrame(rows, columns=names)
-
-    return spread(df.select(id_col, payload_col)).mapInPandas(
-        run, schema=out_schema)
+    return payload_rows(df, guarded, f"{fields}, error string",
+                        payload_col, id_col)
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:

@@ -1,6 +1,7 @@
-"""The row-local extraction boundary (``meza_spark.util.extract_rows``):
-every payload operator turns a bad payload into one ``error`` row and
-never fails the job, and none of them writes its own ``mapInPandas``."""
+"""The row-local payload boundary (``meza_spark.util.payload_rows``) and
+the extraction layer over it (``extract_rows``): every extraction
+operator turns a bad payload into one ``error`` row and never fails the
+job, and no payload operator writes its own ``mapInPandas``."""
 
 import ast
 import os
@@ -9,6 +10,7 @@ import pytest
 
 from meza_spark.io.archive import encode_zip, expand_archive, \
     expand_archive_bytes
+from meza_spark.llm.code import python_source_facts
 from meza_spark.llm.crawl import encode_sitemap, parse_sitemap_bytes, \
     sitemap_urls
 from meza_spark.llm.doctext import document_text, extract_document_bytes
@@ -19,7 +21,10 @@ from meza_spark.llm.pdf import encode_pdf, extract_pdf_bytes, pdf_text
 from meza_spark.llm.rtf import encode_rtf, extract_rtf_bytes, rtf_text
 from meza_spark.llm.subtitles import encode_srt, extract_subtitles_bytes, \
     subtitle_cues
-from meza_spark.util import extract_rows
+from meza_spark.llm.multimodal import decode_audio, decode_image, \
+    decode_video, frame_sample, image_features, parse_media_headers, \
+    resize_image
+from meza_spark.util import extract_rows, payload_rows
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 T = "the quick brown fox"
@@ -154,8 +159,74 @@ def _map_in_pandas_calls(path):
 
 def test_payload_operators_build_through_extract_rows():
     modules = [f"meza_spark/llm/{m}.py" for m in (
-        "pdf", "rtf", "eml", "office", "doctext", "subtitles", "crawl")]
+        "pdf", "rtf", "eml", "office", "doctext", "subtitles", "crawl",
+        "multimodal", "code")]
     modules.append("meza_spark/io/archive.py")
     stray = [f"{m}:{line}" for m in modules
              for line in _map_in_pandas_calls(os.path.join(ROOT, m))]
     assert not stray, stray
+
+
+# the operators built directly on ``payload_rows``: how to build each
+# over a ``media_id long, payload binary`` frame ``df`` or a
+# ``doc_id long, text string`` frame ``t``, and its output schema
+PAYLOAD_ROWS_OPERATORS = {
+    "decode_image": (
+        lambda df, t: decode_image(df),
+        "media_id:bigint,width:int,height:int,channels:int,"
+        "mean_pixel:double,crc:bigint"),
+    "decode_audio": (
+        lambda df, t: decode_audio(df),
+        "media_id:bigint,sample_rate:int,channels:int,n_samples:bigint,"
+        "duration_ms:bigint,mean_amp:double,rms:double,peak:double"),
+    "decode_video": (
+        lambda df, t: decode_video(df),
+        "media_id:bigint,frame_idx:int,ts_ms:bigint,width:int,height:int,"
+        "mean_pixel:double"),
+    "image_features": (
+        lambda df, t: image_features(df),
+        "media_id:bigint,features:array<float>"),
+    "frame_sample": (
+        lambda df, t: frame_sample(df),
+        "media_id:bigint,frame_idx:int,ts_ms:bigint,frame:binary"),
+    "resize_image": (
+        lambda df, t: resize_image(df, 4, 4),
+        "media_id:bigint,payload:binary,width:int,height:int"),
+    "parse_media_headers": (
+        lambda df, t: parse_media_headers(df),
+        "media_id:bigint,format:string,width:int,height:int,channels:int,"
+        "sample_rate:int,duration_ms:bigint,orientation:int"),
+    "python_source_facts": (
+        lambda df, t: python_source_facts(t),
+        "doc_id:bigint,parse_ok:boolean,n_defs:int,n_classes:int,"
+        "docstrings:string,comments:string,norm_sha:string"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PAYLOAD_ROWS_OPERATORS))
+def test_payload_rows_operator_schemas(spark, name):
+    build, schema = PAYLOAD_ROWS_OPERATORS[name]
+    df = spark.createDataFrame([(1, bytearray(b"x"))],
+                               "media_id long, payload binary")
+    t = spark.createDataFrame([(1, "x = 1\n")], "doc_id long, text string")
+    out = build(df, t)
+    assert out.schema.simpleString() == f"struct<{schema}>"
+    assert all(f.nullable for f in out.schema)
+
+
+def test_payload_rows_hands_fn_the_value_as_arrow_delivers_it(spark):
+    def fn(key, value):
+        return [(type(value).__name__, key * 10)] * (key % 2)
+
+    df = spark.createDataFrame(
+        [(1, bytearray(b"a"), "a"), (2, bytearray(b"b"), "b"),
+         (3, None, None)], "k long, blob binary, text string")
+    got = sorted(tuple(r) for r in payload_rows(
+        df, fn, "kind string, x bigint", "blob", "k").collect())
+    assert got == [(1, "bytes", 10)]
+    got = sorted(tuple(r) for r in payload_rows(
+        df, fn, "kind string, x bigint", "text", "k").collect())
+    assert got == [(1, "str", 10)]
+    with pytest.raises(Exception, match="ZeroDivisionError"):
+        payload_rows(df, lambda k, v: [(1 // 0, 0)], "a int, b int",
+                     "blob", "k").collect()

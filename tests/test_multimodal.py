@@ -2573,6 +2573,45 @@ def test_decode_audio_df_dispatch(spark):
     assert rows[1]["rms"] == rows[2]["rms"] == rows[3]["rms"]
 
 
+
+def test_decode_audio_skip_drops_perceptual_codecs(spark):
+    """MP3 and Ogg raise NotImplementedError (no perceptual decoder):
+    ``skip`` drops them like any undecodable payload, ``error`` still
+    fails the job."""
+    import struct
+
+    import numpy as np
+
+    from meza_spark.llm.multimodal import decode_audio
+
+    sm = np.array([0, 8192, -8192], dtype="<i2")
+    wav = (b"RIFF" + struct.pack("<I", 36 + 6) + b"WAVE"
+           + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000,
+                                   2, 16)
+           + b"data" + struct.pack("<I", 6) + sm.tobytes())
+    mp3 = b"ID3\x04\x00\x00\x00\x00\x00\x00" + b"\xff\xfb\x90\x00" * 8
+    ogg = b"OggS\x00\x02" + b"\x00" * 40
+    df = spark.createDataFrame(
+        [(1, bytearray(wav)), (2, bytearray(mp3)), (3, bytearray(ogg))],
+        "media_id long, payload binary")
+    rows = decode_audio(df, unsupported="skip").collect()
+    assert [(r["media_id"], r["sample_rate"]) for r in rows] == [(1, 8000)]
+    with pytest.raises(Exception, match="perceptual codecs"):
+        decode_audio(df).collect()
+
+
+@pytest.mark.parametrize("op,value", [
+    ("decode_image", "skp"), ("decode_audio", "skp"),
+    ("decode_audio", "stub"), ("decode_video", "skp"),
+    ("decode_video", "stub")])
+def test_unknown_unsupported_value_rejected(spark, media, op, value):
+    """An ``unsupported`` value the operator does not offer raises
+    while the frame is built, instead of behaving as ``'error'``."""
+    from meza_spark.llm import multimodal as mm
+
+    with pytest.raises(ValueError, match=f"unsupported='{value}'"):
+        getattr(mm, op)(media, unsupported=value)
+
 def test_apng_full_walk():
     """APNG: acTL/fcTL/fdAT walk with blend_op source/over and all
     three dispose_ops, checked against hand-computed canvases."""
